@@ -96,17 +96,29 @@ def table_rowcount(sf_dir: str, name: str) -> int:
     counts are exact; nothing in the corpus uses deletion vectors),
     without launching a Spark job at plan-BUILD time (r13: the
     auto_cells/log-n-width laws ran an eager count job inside every
-    fresh plan construction of the ANN/banded family)."""
+    fresh plan construction of the ANN/banded family).
+
+    A directory table is walked recursively, so nested (partitioned)
+    layouts count in full. Like Spark's file index, it skips names
+    starting with ``_`` or ``.`` (``_SUCCESS``, ``_temporary``, CRC
+    files). A directory holding no parquet file raises
+    ``FileNotFoundError`` rather than reporting 0 rows."""
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    if not os.path.isdir(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [
+            os.path.join(root, f)
+            for f in names
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

@@ -99,6 +99,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table
@@ -1409,20 +1410,11 @@ class TxLogTable:
             pa = self._dv_pairs_df(spark, sa.dvs, sa.dv_side, ktype, dv_hit)
             pb = self._dv_pairs_df(spark, sb.dvs, sb.dv_side, ktype, dv_hit)
             kdf = pa if pb is None else pa.exceptAll(pb)
-            if (
-                self._dv_total(sa.dvs, sa.dv_side)
-                <= self.DV_BROADCAST_MAX
-            ):
-                kdf = F.broadcast(kdf)
             emit(
-                df.withColumn("__dv_src", self._norm_file_expr())
-                .join(
-                    kdf,
-                    (F.col("__dv_src") == F.col("__dv_file"))
-                    & (F.col(lg) == F.col("__dv_key")),
+                self._dv_join(
+                    df, lg, kdf, self._dv_total(sa.dvs, sa.dv_side),
                     "left_semi",
-                )
-                .drop("__dv_src", "__file"),
+                ).drop("__file"),
                 "delete",
             )
         if out is None:
@@ -1572,6 +1564,35 @@ class TxLogTable:
             n for m in dv_side.values() for n in m.values()
         )
 
+    @staticmethod
+    def _local_df(
+        spark: SparkSession, schema: T.StructType, columns: list[list]
+    ) -> DataFrame:
+        """A driver-built relation (one Python list per field of
+        `schema`) shipped as Arrow: it plans as a LocalTableScan, so
+        joining or broadcasting it runs no Spark job and starts no
+        Python worker — a list-built createDataFrame is a pickled-row
+        RDD whose broadcast launches a job through the Python runner.
+        Field types map through Spark's own Arrow schema conversion,
+        so the relation carries exactly `schema`'s types."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        table = pa.Table.from_pydict(
+            dict(zip(schema.names, columns)), schema=to_arrow_schema(schema)
+        )
+        return spark.createDataFrame(table, schema)
+
+    @classmethod
+    def _key_list_df(cls, spark: SparkSession, keys) -> DataFrame:
+        """Driver-side key values (JSON-portable: all int or all str)
+        as a one-column `__dv_key` relation."""
+        ks = sorted(set(keys))
+        ktype = T.StringType() if isinstance(ks[0], str) else T.LongType()
+        return cls._local_df(
+            spark, T.StructType([T.StructField("__dv_key", ktype)]), [ks]
+        )
+
     def _dv_pairs_df(
         self,
         spark: SparkSession,
@@ -1581,21 +1602,31 @@ class TxLogTable:
         files: list[str] | None = None,
     ) -> DataFrame | None:
         """The folded DV set as a (__dv_file, __dv_key) DataFrame —
-        inline pairs via a local relation, sidecar pairs scanned from
-        their parquet (never driver-materialized). `files` restricts
-        the INLINE pairs to the scanned subset (an optimization only —
-        anti-joins are per-file, so pairs of unscanned or dead files
-        are no-ops); sidecar scans are left whole for the same reason.
+        inline pairs as an Arrow-built local relation (see _local_df:
+        its broadcast costs no job), sidecar pairs scanned from their
+        parquet (never driver-materialized). `ktype` is the key
+        column's Spark type as the scan presents it, so both join
+        sides compare without a cast. `files` restricts the INLINE
+        pairs to the scanned subset (an optimization only — the DV
+        join is per-file, so pairs of unscanned or dead files are
+        no-ops); sidecar scans are left whole for the same reason.
         Returns None when the table carries no DVs at this state."""
-        schema = f"__dv_file string, __dv_key {ktype.simpleString()}"
         parts = []
-        inline = sorted(
-            (f, k)
-            for f in (files if files is not None else dvs)
-            for k in dvs.get(f, ())
-        )
-        if inline:
-            parts.append(spark.createDataFrame(inline, schema))
+        pair_files, pair_keys = [], []
+        for f in files if files is not None else dvs:
+            ks = dvs.get(f, ())
+            pair_files.extend([f] * len(ks))
+            pair_keys.extend(ks)
+        if pair_keys:
+            schema = T.StructType(
+                [
+                    T.StructField("__dv_file", T.StringType()),
+                    T.StructField("__dv_key", ktype),
+                ]
+            )
+            parts.append(
+                self._local_df(spark, schema, [pair_files, pair_keys])
+            )
         for sc in sorted(dv_side):
             parts.append(
                 spark.read.parquet(os.path.join(self.path, sc)).select(
@@ -1639,20 +1670,21 @@ class TxLogTable:
 
         Merge-on-read deletion vectors apply last and are FILE-SCOPED
         (Delta DV semantics): a DV on file A kills rows of file A
-        only — one broadcast anti-join on (source file, key), so an
-        upserted replacement row in a NEW file survives its own key's
-        DV on the old file (the upsert_mor case a table-global
-        anti-join would corrupt). `dv_override` — a (dvs, dv_side)
-        pair — lets CDC reads pin DVs from a different version than
-        the schema. `with_file=True` appends a `__file` column (the
-        row's source file URI) for writers that need row→file
-        attribution (the delete/upsert targeting passes).
-
-        The DV set is BROADCAST only while its folded row count stays
-        under DV_BROADCAST_MAX; past that the anti-join falls back to
-        a shuffle (the broadcast otherwise grows without bound between
-        compactions — r10 verdict fix; dv_debt() names the moment to
-        OPTIMIZE).
+        only, so an upserted replacement row in a NEW file survives
+        its own key's DV on the old file (the upsert_mor case a
+        table-global anti-join would corrupt). They apply as one
+        anti-join (_dv_join) hashed on the key alone, with the
+        source-file match as its residual condition: the URI
+        normalization runs only on rows whose key carries a DV. Inline
+        DV pairs arrive as an Arrow local relation, so a scan below
+        DV_BROADCAST_MAX folded DV rows broadcasts them without a
+        Spark job or a Python worker; past that bound the anti-join
+        shuffles (dv_debt() names the moment to OPTIMIZE).
+        `dv_override` — a (dvs, dv_side) pair — lets CDC reads pin
+        DVs from a different version than the schema.
+        `with_file=True` appends a `__file` column (the row's source
+        file URI) for writers that need row→file attribution (the
+        delete/upsert targeting passes).
         """
         import pyarrow.parquet as pq
 
@@ -1661,8 +1693,7 @@ class TxLogTable:
         dvs, dv_side = (
             (st.dvs, st.dv_side) if dv_override is None else dv_override
         )
-        pairs = sorted((f, k) for f in files for k in dvs.get(f, ()))
-        has_dv = bool(pairs) or bool(dv_side)
+        has_dv = bool(dv_side) or any(dvs.get(f) for f in files)
         evolving = set(st.added) | st.dropped
         if evolving:
             groups: dict[frozenset, list[str]] = {}
@@ -1704,38 +1735,58 @@ class TxLogTable:
         if has_dv and out is not None:
             lg = st.renames.get(st.dv_key, st.dv_key)
             ktype = out.schema[lg].dataType
-            kdf = self._dv_pairs_df(spark, dvs, dv_side, ktype, files)
-            if self._dv_total(dvs, dv_side) <= self.DV_BROADCAST_MAX:
-                kdf = F.broadcast(kdf)
-            # file-scoped anti-join on (source file, key): a DV kills
-            # rows of ITS file only, so an upserted replacement row in
-            # a new file survives its own key's DV on the old file
-            out = (
-                out.withColumn("__dv_src", self._norm_file_expr())
-                .join(
-                    kdf,
-                    (F.col("__dv_src") == F.col("__dv_file"))
-                    & (F.col(lg) == F.col("__dv_key")),
-                    "left_anti",
-                )
-                .drop("__dv_src")
+            out = self._dv_join(
+                out,
+                lg,
+                self._dv_pairs_df(spark, dvs, dv_side, ktype, files),
+                self._dv_total(dvs, dv_side),
+                "left_anti",
             )
         if carry_file and not with_file and out is not None:
             out = out.drop("__file")
         return out
 
+    def _dv_join(
+        self, df: DataFrame, key: str, kdf: DataFrame, dv_rows: int, how: str
+    ) -> DataFrame:
+        """Join scanned rows (carrying `__file`) to the DV pairs `kdf`
+        — `left_anti` drops the rows the DVs kill, `left_semi` keeps
+        only them. The match is FILE-SCOPED: a pair kills the row of
+        its key in ITS file only, so an upserted replacement row in a
+        new file survives its key's DV on the old file.
+
+        The join hashes on the key alone; the file comparison is the
+        residual condition, so _norm_file_expr() runs only on rows
+        whose key has a DV, not on every scanned row. The coalesce()
+        keeps the planner from lifting that equality into the hash
+        keys (it extracts every cross-side `=` conjunct); both sides
+        are never NULL, so it changes no result. `kdf` is broadcast
+        while `dv_rows` (the folded DV count) stays within
+        DV_BROADCAST_MAX; past that the join shuffles, so the
+        broadcast cannot grow without bound between compactions."""
+        if dv_rows <= self.DV_BROADCAST_MAX:
+            kdf = F.broadcast(kdf)
+        same_file = self._norm_file_expr() == F.col("__dv_file")
+        return df.join(
+            kdf,
+            (F.col(key) == F.col("__dv_key"))
+            & F.coalesce(same_file, F.lit(False)),
+            how,
+        )
+
     def _norm_file_expr(self):
         """Normalize a row's captured `__file` URI to the log's file
         name: percent-decoded (the `_metadata.file_path` value is a
-        URI — a table path with a space arrives as `%20`; the
-        driver-side targeting in delete_mor/upsert_mor already
-        unquotes via urllib, so the read side MUST match or the DV
-        anti-join silently matches nothing and deleted rows resurface
-        — r10 ADVICE fix), scheme stripped, relativized under the
-        table root (borrowed clone references stay absolute — their
-        log name). `url_decode` is java.net.URLDecoder, which also
-        maps a literal `+` to space — a URI path never encodes space
-        as `+`, so pre-escape `+` to `%2B` to keep literal pluses."""
+        URI — a table path with a space arrives as `%20`, and the DV
+        pairs hold decoded log names, so without the decode the DV
+        join silently matches nothing and deleted rows resurface),
+        scheme stripped, relativized under the table root (borrowed
+        clone references stay absolute — their log name).
+        `url_decode` is java.net.URLDecoder, which also maps a
+        literal `+` to space — a URI path never encodes space as `+`,
+        so pre-escape `+` to `%2B` to keep literal pluses. The MoR
+        targeting passes apply it to matched rows only, and the read
+        side (_dv_join) to key-matched candidates only."""
         import re as _re
 
         root = _re.escape(os.path.abspath(self.path))
@@ -1966,9 +2017,7 @@ class TxLogTable:
         if isinstance(keys, DataFrame):
             keys_df = keys.select(F.col(keys.columns[0]).alias("__dv_key"))
         elif keys:
-            keys_df = spark.createDataFrame(
-                [(k,) for k in sorted(set(keys))], ["__dv_key"]
-            )
+            keys_df = self._key_list_df(spark, keys)
         else:
             keys_df = None
 
@@ -1995,9 +2044,8 @@ class TxLogTable:
                         os.path.join(self.path, dv["sidecar"])
                     ).select("__dv_key")
                 else:
-                    theirs = spark.createDataFrame(
-                        [(k,) for ks in dvf.values() for k in ks],
-                        ["__dv_key"],
+                    theirs = self._key_list_df(
+                        spark, [k for ks in dvf.values() for k in ks]
                     )
                 if (set(dvf) & ours_f) or _keys_hit(theirs):
                     raise ValueError(
@@ -2055,8 +2103,6 @@ class TxLogTable:
 
         Returns (dv_payload, files_counts, keys_df, n_matched).
         """
-        from pyspark.sql import types as T
-
         if inline_max is None:
             inline_max = self.DV_INLINE_MAX
         ktype = snap.schema[key_col].dataType
@@ -2070,11 +2116,19 @@ class TxLogTable:
                 f"{ktype.simpleString()}"
             )
         matched = matched.localCheckpoint()  # one targeting scan, reused
-        n_matched = matched.count()
+        files_counts = {
+            r["__dv_file"]: r["n"]
+            for r in matched.groupBy("__dv_file")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        n_matched = sum(files_counts.values())
         if n_matched == 0:
             raise ValueError(f"{verb}: predicate matched no rows")
         keys_df = matched.select("__dv_key")
-        if keys_df.distinct().count() != n_matched:
+        # struct() counts a NULL key as one value, as distinct() does
+        n_keys = keys_df.agg(F.count_distinct(F.struct("__dv_key"))).first()[0]
+        if n_keys != n_matched:
             raise ValueError(
                 f"{verb}: {key_col!r} is not unique among matched "
                 "rows — DV anti-join semantics need a unique key"
@@ -2096,12 +2150,6 @@ class TxLogTable:
                 f"matched {key_col!r} values — key must be unique "
                 "table-wide"
             )
-        files_counts = {
-            r["__dv_file"]: r["n"]
-            for r in matched.groupBy("__dv_file")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
         unknown = set(files_counts) - st.active
         if unknown:
             raise RuntimeError(
@@ -2159,10 +2207,14 @@ class TxLogTable:
         regime); above it the keys go to a `_dv/` sidecar parquet and
         the entry holds counts — bulk deltas cost O(1) driver memory
         and log bytes (r10 verdict fix #1). Every subsequent read pays
-        one anti-join of the folded keys (broadcast under
-        DV_BROADCAST_MAX, shuffle above) — the read tax CoW avoids and
-        MoR accepts to make deletes O(matched) instead of O(files
-        touched); compaction settles the debt (dv_debt() names when).
+        one anti-join of the folded keys (_dv_join: hashed on the key,
+        broadcast under DV_BROADCAST_MAX, shuffle above) — the read
+        tax CoW avoids and MoR accepts to make deletes O(matched)
+        instead of O(files touched). Below the broadcast bound with
+        inline DVs the tax is a hash probe per scanned row: the pairs
+        ship as an Arrow local relation (no extra job) and the file
+        match runs only on key hits. Compaction settles the debt
+        (dv_debt() names when).
         """
         return self._mor_commit_dv(
             spark, predicate, key_col, inline_max, verb="delete_mor"
@@ -2290,8 +2342,10 @@ class TxLogTable:
         # bulk — never .collect() its keys to the driver)
         delta_keys = df.select(F.col(key_col).alias("__dv_key"))
         delta_keys = delta_keys.localCheckpoint()
-        n_delta = delta_keys.count()
-        if delta_keys.distinct().count() != n_delta:
+        n_delta, n_distinct = delta_keys.agg(
+            F.count(F.lit(1)), F.count_distinct(F.struct("__dv_key"))
+        ).first()
+        if n_distinct != n_delta:
             raise ValueError(
                 f"upsert_mor: {key_col!r} is not unique in the delta — "
                 "two versions of one key is ambiguous"

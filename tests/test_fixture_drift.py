@@ -164,3 +164,23 @@ def test_survey_totals_match_registry():
     assert mc and (int(mc.group(1)), int(mc.group(2))) == (n, n_oracle), (
         "COVERAGE.md stale — run scripts/gen_coverage.py"
     )
+
+
+def test_table_rowcount_walks_partitioned_directory(tmp_path):
+    """A directory table counts every parquet file under it, nested
+    partition directories included, and skips `_`/`.` names as
+    Spark's file index does; a directory with no parquet file raises
+    instead of reporting 0 rows."""
+    import pyarrow as pa
+
+    from lightcurator_spark.registry import table_rowcount
+
+    tbl = pa.table({"k": [0, 1, 2, 3, 4, 5, 6], "p": [0, 0, 1, 1, 1, 2, 2]})
+    path = tmp_path / "t.parquet"
+    pq.write_to_dataset(tbl, str(path), partition_cols=["p"])
+    (path / "_temporary").mkdir()  # an aborted writer's leftovers
+    pq.write_table(tbl, str(path / "_temporary" / "part-0.parquet"))
+    assert table_rowcount(str(tmp_path), "t") == 7
+    (tmp_path / "empty.parquet").mkdir()
+    with pytest.raises(FileNotFoundError):
+        table_rowcount(str(tmp_path), "empty")

@@ -1754,26 +1754,68 @@ def test_dv_read_survives_percent_encoded_table_path(spark, tmp_path):
     with a space arrives percent-encoded, and the read-side DV
     anti-join must decode it exactly like the driver-side targeting
     (before the fix, deleted rows silently resurfaced in scans while
-    count_snapshot still subtracted them)."""
-    t = TxLogTable(str(tmp_path / "tbl with space"))
+    count_snapshot still subtracted them). The path also carries a
+    literal `+` (URLDecoder would map it to a space) and `%`. Both
+    JSON-portable key types run through the Arrow-built DV relation
+    (its key field takes the scanned column's type), for snapshot and
+    change-feed reads; a NULL delta key is one distinct value (a blind
+    insert), not a uniqueness breach."""
+    for ktype, key in (("int", int), ("string", str)):
+        t = TxLogTable(str(tmp_path / f"tbl {ktype} a+b%c"))
+        schema = f"id {ktype}, v string"
+        t.commit(
+            spark.createDataFrame([(key(i), f"r{i}") for i in range(5)], schema),
+            stats_cols=["id"],
+        )
+        v = t.delete_mor(spark, F.col("id").isin(key(1), key(3)), "id")
+        got = sorted(r["id"] for r in t.read_snapshot(spark).collect())
+        assert got == [key(0), key(2), key(4)], (
+            "DV anti-join must survive URI encoding"
+        )
+        assert t.count_snapshot() == 3
+        ch = t.read_changes(spark, v - 1, v)
+        assert sorted(r["id"] for r in ch.collect()) == [key(1), key(3)]
+        # upsert through the same path
+        t.upsert_mor(
+            spark,
+            spark.createDataFrame([(key(2), "NEW"), (None, "NUL")], schema),
+            "id",
+        )
+        rows = dict(
+            (r["id"], r["v"]) for r in t.read_snapshot(spark).collect()
+        )
+        assert rows == {key(0): "r0", key(2): "NEW", key(4): "r4", None: "NUL"}
+
+
+def test_dv_reads_broadcast_a_local_relation_keyed_on_the_key(spark, tmp_path):
+    """Plan tripwire for the DV join: after a delete_mor, the snapshot
+    and change-feed reads broadcast the inline DV pairs from a
+    LocalTableScan (a list-built pickled-row RDD shows as `Scan
+    ExistingRDD` and costs a broadcast job through a Python worker),
+    and the join hashes on the key column alone — the source-file
+    match must stay in the residual condition, which the planner
+    would otherwise lift into the hash keys."""
+    import re
+
+    t = TxLogTable(str(tmp_path / "tbl"))
     t.commit(
         spark.createDataFrame(
-            [(i, f"r{i}") for i in range(5)], "id long, v string"
-        ),
-        stats_cols=["id"],
+            [(i, f"r{i}") for i in range(6)], "id long, v string"
+        )
     )
-    t.delete_mor(spark, F.col("id").isin(1, 3), "id")
-    got = sorted(r["id"] for r in t.read_snapshot(spark).collect())
-    assert got == [0, 2, 4], "DV anti-join must survive URI encoding"
-    assert t.count_snapshot() == 3
-    # upsert through the same path
-    t.upsert_mor(
-        spark, spark.createDataFrame([(2, "NEW")], "id long, v string"), "id"
-    )
-    rows = dict(
-        (r["id"], r["v"]) for r in t.read_snapshot(spark).collect()
-    )
-    assert rows == {0: "r0", 2: "NEW", 4: "r4"}
+    v = t.delete_mor(spark, F.col("id").isin(1, 4), "id")
+    for df in (t.read_snapshot(spark), t.read_changes(spark, v - 1, v)):
+        df.collect()  # the executed plan string then holds the final plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Scan ExistingRDD" not in plan
+        assert re.search(
+            r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan", plan
+        ), plan
+        keys = re.findall(r"BroadcastHashJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
+        assert keys, plan
+        for left, right in keys:
+            assert re.fullmatch(r"id#\d+L?", left), plan
+            assert re.fullmatch(r"__dv_key#\d+L?", right), plan
 
 
 def test_bulk_upsert_mor_sidecar_roundtrip(spark, tmp_path):
