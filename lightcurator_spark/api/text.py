@@ -1,14 +1,25 @@
-"""Text-analysis family: tokenization, quality, language id, LM scores, packing.
+"""Text-analysis family: tokenization, quality, language id, LM scores,
+packing, retrieval, data selection and mixture audits.
 
-Split from the api.py monolith in round 7 (pure refactor under the
-green suite); import via ``from lightcurator_spark import api``.
+A function here is the only body of its operator. The registry's
+oracle-checked queries (a22, l10, l27, l30, l32, l38, l40, l41, l43,
+l44, ml17) load their table, make one call with fixed literals, and
+shape the output at the edge (column renames, 4-dp rounding), so the
+plan shapes documented below are what users and the oracle tests both
+run. Functions return raw doubles; round at the edge. Import via
+``from lightcurator_spark import api``.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from lightcurator_spark.operators.dedup import gram_array
+
 
 def pack_sequences(
     df: DataFrame,
@@ -104,13 +115,15 @@ def chunk_tokens(
     text, its token count, and a 0-based chunk index. Pure map-side
     (split → sequence → explode → slice): linear in corpus bytes, a
     document never crosses partitions. Trailing chunks may be shorter
-    than ``window``."""
-    tokens = F.split(F.col(text_col), " ")
-    out = df.select(
-        F.col(id_col),
-        tokens.alias("__tokens"),
+    than ``window``. The token array is bound in its own projection
+    below the explode, so ``split`` runs once per document rather than
+    once per emitted chunk."""
+    toks = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__tokens"))
+    out = toks.select(
+        id_col,
+        "__tokens",
         F.explode(
-            F.sequence(F.lit(0), F.size(tokens) - 1, F.lit(stride))
+            F.sequence(F.lit(0), F.size("__tokens") - 1, F.lit(stride))
         ).alias("__start"),
     )
     chunk = F.slice("__tokens", F.col("__start") + 1, window)
@@ -208,38 +221,36 @@ def ngram_novelty(
     docs: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """Share of each document's distinct n-grams first seen in THIS
-    document, with `id_col` as arrival order (L38)."""
-    toks = F.split(F.col(text_col), " ")
+    document, with `id_col` as arrival order (L38). Returns
+    (<id_col>, n_grams, n_novel, novelty); documents shorter than n
+    tokens have no grams and no row.
+
+    A document's novel-gram count is exactly the number of grams whose
+    min(id) IS that document, so the first-occurrence dictionary is
+    re-aggregated by its winner directly instead of joined back onto
+    the gram table (a corpus-sized join at scale). Within-doc gram
+    dedup is ``array_distinct`` in the map expression (gram_array), so
+    no (doc, gram) distinct exchange exists: gram strings cross the
+    network once, in the map-side-combined min-agg. A fully map-side
+    per-doc leg (size of the gram array, no exchange) was measured and
+    rejected: fresh 1.60 s vs 1.42 s but warm 0.045 s vs 0.55 s, since
+    a leg without an exchange rebuilds its grams on every re-run."""
     sh = docs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(
-            F.when(
-                F.size(toks) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-                ),
-            ).otherwise(F.array())
-        ).alias("__g"),
-    ).distinct()
-    first = sh.groupBy("__g").agg(F.min("__id").alias("__first"))
-    return (
-        sh.join(first, "__g")
+        F.col(id_col).alias("__id"), gram_array(text_col, n).alias("__gs")
+    ).select("__id", F.explode("__gs").alias("__g"))
+    per_doc = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("n_grams"))
+    novel = (
+        sh.groupBy("__g")
+        .agg(F.min("__id").alias("__id"))
         .groupBy("__id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.count(F.when(F.col("__first") == F.col("__id"), 1)).alias(
-                "n_novel"
-            ),
-        )
-        .select(
-            F.col("__id").alias(id_col),
-            "n_grams",
-            "n_novel",
-            (F.col("n_novel") / F.col("n_grams").cast("double")).alias(
-                "novelty"
-            ),
-        )
+        .agg(F.count(F.lit(1)).alias("n_novel"))
+    )
+    n_novel = F.coalesce("n_novel", F.lit(0))
+    return per_doc.join(novel, "__id", "left").select(
+        F.col("__id").alias(id_col),
+        "n_grams",
+        n_novel.alias("n_novel"),
+        (n_novel / F.col("n_grams").cast("double")).alias("novelty"),
     )
 
 
@@ -248,9 +259,23 @@ def bigram_logprob(
 ) -> DataFrame:
     """Interpolated bigram-LM log-prob per document (L27): mean of
     ln(λ·P(w₂|w₁) + (1−λ)·P(w₂)) with the LM estimated from the
-    corpus itself; map-side in-array bigram slide, vocab-sized LM
-    joins broadcast."""
+    corpus itself, the KenLM-style perplexity gate. Returns
+    (<id_col>, n_bigrams, avg_bigram_logprob).
+
+    Bigrams are built MAP-SIDE from each doc's token array (a slide via
+    transform over the index range, no positional self-join); the
+    unigram tables are vocabulary-sized and broadcast, the total is a
+    1-row leg. Measured and rejected: aggregating per-doc bigram
+    multiplicities first and re-reading that exchange for the LM table
+    (one bigram explode, a ReusedExchange) won under the bench profile
+    but lost under the cluster profile (AQE on, 128 partitions) at 1x
+    (1.09 s vs 1.40 s) and on the 16x replica (2.94 s vs 5.26 s): the
+    LM leg's map-side combine shuffles dictionary-sized partials, the
+    reuse re-reads doc-granular rows."""
     lam = float(lam)
+    # decimal complement: 1 − 0.8 is 0.2 exactly, as in SQL, not the
+    # binary 0.19999999999999996
+    lam_c = float(1 - Decimal(repr(lam)))
     toks = df.select(
         F.col(id_col).alias("__id"), F.split(F.col(text_col), " ").alias("__t")
     )
@@ -286,7 +311,7 @@ def bigram_logprob(
             F.log(
                 F.lit(lam)
                 * (F.col("__cb").cast("double") / F.col("__c1").cast("double"))
-                + F.lit(1.0 - lam)
+                + F.lit(lam_c)
                 * (F.col("__c2").cast("double") / F.col("__n").cast("double"))
             ).alias("__lp"),
         )
@@ -337,24 +362,46 @@ def bm25_retrieve(
 ) -> DataFrame:
     """BM25 top-`k` documents per query (L40). `queries` carries
     (query_id, term) rows — multi-term queries are multiple rows.
-    Returns (query_id, <id_col>, bm25, rn). Corpus stats stay a lazy
-    1-row leg; the query-term table is broadcast; ranking orders by
-    integer 1e-4 score units (quantize-before-sum) with id tie-break.
+    Returns (query_id, <id_col>, bm25, rn).
+
+    Plan: ONE token explode feeds tf; dl, df and the corpus stats
+    (N, avgdl) all derive from tf (sum of tf = doc length, rows per
+    token = doc frequency), so the (doc, token) exchange is planned
+    once and re-read. The stats stay a lazy 1-row leg cross-joined in,
+    never a driver scalar; the query-term table broadcasts onto tf and
+    also prunes the df leg to the query's terms. Each per-term score
+    quantizes to integer 1e-4 units BEFORE the per-(query, doc) sum
+    (integer addition is associative, double addition is not) and the
+    ranking orders by those units with an id tie-break.
     """
+    # isnotnull(id): the dl join pushes that filter into the scoring
+    # leg's tf subtree only, which leaves dl/stats with a different
+    # canonical subtree and their own corpus explode (3 explodes, 1
+    # reuse). Stating it up front keeps ONE shared exchange; null ids
+    # could never join dl anyway.
     tok = docs.select(
         F.col(id_col).alias("__id"),
         F.explode(F.split(F.col(text_col), " ")).alias("__tok"),
-    )
+    ).filter(F.col("__id").isNotNull())
     tf = tok.groupBy("__id", "__tok").agg(F.count(F.lit(1)).alias("__tf"))
-    # dl/df/stats derive from tf — one explode, one shared exchange
-    # (the L40 leg-reuse discipline)
     dl = tf.groupBy("__id").agg(F.sum("__tf").alias("__dl"))
-    dfreq = tf.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
+    qt = queries.select("query_id", F.col("term").alias("__term"))
+    # the __tf >= 1 tautology is load-bearing: without a reference to
+    # the tf value, RemoveRedundantAggregates collapses this leg to a
+    # distinct over a THIRD corpus explode instead of re-reading tf's
+    # exchange
+    dfreq = (
+        tf.filter(F.col("__tf") >= 1)
+        .groupBy("__tok")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .join(F.broadcast(qt.select("__term").distinct()),
+              F.col("__tok") == F.col("__term"))
+        .select("__tok", "__df")
+    )
     stats = dl.agg(
         F.count(F.lit(1)).alias("__nd"),
         F.avg(F.col("__dl").cast("double")).alias("__avgdl"),
     )
-    qt = queries.select("query_id", F.col("term").alias("__term"))
     idf = F.log(
         F.lit(1) + (F.col("__nd") - F.col("__df") + 0.5) / (F.col("__df") + 0.5)
     )
@@ -401,6 +448,12 @@ def dsir_weights(
     `F.col("lang") == "en"`). Higher = more target-like; resample the
     raw corpus proportionally to exp(weight) to match the target
     distribution (Xie et al. 2023). Returns (<id_col>, log_ir_weight).
+
+    One token explode feeds per-doc tf; both LMs and the 1-row totals
+    leg derive from tf, and the scoring joins key on the token. The
+    per-token log-ratio quantizes to integer 1e-6 units BEFORE the tf
+    multiply and per-doc sum (integer addition is associative), so
+    log_ir_weight is exactly units / 1e6.
     """
     tok = docs.select(
         F.col(id_col).alias("__id"),
@@ -453,10 +506,18 @@ def mixture_weights(
     alpha: float = 0.7,
     token_budget: int = 100000,
 ) -> DataFrame:
-    """Temperature-scaled source mixture (L43): w_s ∝ n_tokens^alpha,
-    each source's share of `token_budget`, and its oversampling
-    factor. Returns (<source_col>, n_docs, n_tokens, mix_share,
-    tokens_at_budget, oversample_x)."""
+    """Temperature-scaled source mixture (L43): w_s ∝ n_tokens^alpha
+    (the GPT-3/PaLM rule that flattens the source-size distribution),
+    each source's share of `token_budget`, and its oversampling factor
+    (> 1: the source repeats within one budget epoch). Returns
+    (<source_col>, n_docs, n_tokens, mix_share, tokens_at_budget,
+    oversample_x).
+
+    One map-side token count, partial-aggregated to a source-sized
+    table, lazily checkpointed so the 1-row unit-total leg re-reads
+    those cells rather than the corpus. pow(n, alpha) quantizes to
+    integer 1e-6 units per source BEFORE the total; shares divide the
+    integer units once."""
     s = docs.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.col(text_col), " ")))
@@ -468,7 +529,7 @@ def mixture_weights(
         F.floor(
             F.pow(F.col("n_tokens").cast("double"), alpha) * 1e6 + F.lit(0.5)
         ).cast("long"),
-    )
+    ).localCheckpoint(eager=False)
     tot = u.agg(F.sum("__units").alias("__tu"))
     share = F.col("__units").cast("double") / F.col("__tu")
     return u.crossJoin(F.broadcast(tot)).select(
@@ -686,7 +747,12 @@ def chi2_feature_selection(
     the presence/absence contingency χ² — the classic rank-then-prune
     step before training any text classifier. Multiple occurrences in
     one document count once (presence semantics). Degenerate margins
-    are excluded. Returns (token, class, n_docs_with, chi2)."""
+    are excluded. Returns (token, class, n_docs_with, chi2).
+
+    One distinct (doc, token) explode feeds one (token, class)
+    partial/final agg; document frequencies re-aggregate that
+    vocabulary-bounded cell table, never the corpus (TRAPS #19); class
+    counts and N are broadcast-size legs."""
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(text_col).alias("__t"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lightcurator_spark import api
 from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table, table_rowcount
 
@@ -1638,38 +1639,16 @@ def a22_group_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard diversity auditing: a stream whose entropy collapses (or
     whose HHI spikes) is dominated by a few emitters and skews any
     downstream sample drawn from it; DQ2's PSI answers "did the
-    distribution MOVE", this answers "is it CONCENTRATED".
-
-    Scale: the textbook share-based formula (−Σ p·ln p with p = c/tc)
-    needs the per-type total BEFORE the per-count terms — a join back,
-    which Catalyst plans as a SECOND full scan+shuffle of raw events
-    because the two cu lineages prune differently and never reuse the
-    exchange (measured: 4 exchanges, double scan). The moment
-    decomposition removes the dependency: entropy = ln(Σc) − Σ(c·ln c)/Σc
-    and HHI = Σc²/(Σc)², so ONE (event_type, user_id) partial/final
-    count followed by ONE type-level moment agg covers everything —
-    single lineage, two exchanges, raw rows shuffle exactly once with
-    map-side combine. Both engines evaluate the identical decomposed
-    expression over exact integer counts; 4-dp rounding absorbs the
-    summation-order ulp (the L14/L27 discipline).
-    """
+    distribution MOVE", this answers "is it CONCENTRATED". Both
+    engines evaluate the same moment decomposition over exact integer
+    counts; 4-dp rounding absorbs the summation-order ulp."""
     ev = load_table(spark, sf_dir, "events")
-    cu = ev.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("c"))
-    c = F.col("c")
-    cd = c.cast("double")
-    moments = cu.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(c).alias("n_events"),
-        F.sum(c * F.log(cd)).alias("s_clnc"),
-        F.sum(cd * c).alias("s_c2"),
-    )
-    tc = F.col("n_events")
-    return moments.select(
+    return api.group_entropy(ev, "event_type", "user_id").select(
         "event_type",
-        "n_users",
-        "n_events",
-        R4(F.log(tc.cast("double")) - F.col("s_clnc") / tc).alias("entropy"),
-        R4(F.col("s_c2") / (tc.cast("double") * tc)).alias("hhi"),
+        F.col("n_items").alias("n_users"),
+        F.col("n_rows").alias("n_events"),
+        R4(F.col("entropy")).alias("entropy"),
+        R4(F.col("hhi")).alias("hhi"),
     )
 
 

@@ -21,7 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -34,74 +34,77 @@ def R4(c):
     return F.floor(c * 10000 + F.lit(0.5)) / 10000
 
 
-def shingle_arrays(docs: DataFrame, n: int = 5, keys: tuple = ("doc_id",)) -> DataFrame:
-    """(keys…, grams) — each doc's DISTINCT n-token shingles as ONE
-    sorted-free array, built entirely map-side.
+def gram_array(text_col: str, n: int, distinct: bool = True) -> Column:
+    """Each row's n-token shingles of ``text_col`` as ONE array, built
+    entirely map-side; ``distinct=False`` keeps within-row repeats.
 
     Tokens are whitespace-split (the corpus is space-separated lowercase
-    tokens, FIXTURES.md); shingle i joins tokens i..i+n-1.
+    tokens, FIXTURES.md); shingle i joins tokens i..i+n-1. The token
+    array is bound ONCE per row through the single-element-array lambda
+    (``transform(array(split(..)), t -> ..)``); re-evaluating
+    ``split(text)`` at each use inside the generator measured 1.31 s vs
+    0.35 s for the bare 3-gram explode at sf0.1. ``sequence(1, 0)`` is
+    DESCENDING, so rows shorter than n tokens must take the explicit
+    empty-array branch, not a ``slice(…, 0, n)`` crash.
 
-    r12 (optimization, guide §4.1/§2.3): the generator binds the token
-    array ONCE per row via the single-element-array lambda trick
-    (``transform(array(split(..)), t -> ..)``) — the old expression
-    re-evaluated ``split(text)`` four times per row inside the
-    Generate (size twice, sequence bound, slice source), measured
-    1.31 s -> 0.35 s for the bare 3-gram explode at sf0.1.
-
-    r13 (optimization, guide §2.4 — remove shuffles outright): the
-    per-doc dedup is ``array_distinct`` INSIDE the map expression. Two
-    equal (doc_id, shingle) pairs can only come from the same document
-    (the pair carries the doc key), so within-doc dedup IS global
-    dedup — the old corpus-sized ``.distinct()`` exchange that every
-    shingle consumer paid (hashpartitioning on (doc_id, shingle) of
-    every gram string) is gone from the whole family.
+    Distinct mode dedups with ``array_distinct`` inside the map
+    expression: two equal (doc, shingle) pairs can only come from the
+    same document, so within-doc dedup IS global dedup, and no
+    corpus-sized ``(doc, shingle)`` distinct exchange is needed. Raw
+    mode is for consumers whose semantics make dedup a no-op (semi-join
+    stream sides, build sides that re-``distinct()`` anyway): the
+    optimizer can drop a ``.distinct()`` operator under a semi join but
+    cannot see into the map expression, so they opt out here (l15's
+    semi-join leg measured 1.02 s vs 0.59 s).
     """
-    return docs.select(
-        *keys,
-        F.expr(
-            # sequence(1, 0) is DESCENDING ([1, 0]) — docs
-            # shorter than n tokens must yield an empty array,
-            # not a slice(…, 0, n) crash (caught live when the
-            # L34 strip shortened real docs below the width)
-            f"array_distinct(flatten(transform(array(split(text, ' ')), t ->"
-            f" case when size(t) >= {n} then"
-            f" transform(sequence(1, size(t) - {n - 1}),"
-            f" i -> concat_ws(' ', slice(t, i, {n})))"
-            f" else array() end)))"
-        ).alias("grams"),
+    col = text_col.replace("`", "``")
+    grams = (
+        f"flatten(transform(array(split(`{col}`, ' ')), t ->"
+        f" case when size(t) >= {n} then"
+        f" transform(sequence(1, size(t) - {n - 1}),"
+        f" i -> concat_ws(' ', slice(t, i, {n})))"
+        f" else array() end))"
     )
+    return F.expr(f"array_distinct({grams})" if distinct else grams)
 
 
 def shingles(docs: DataFrame, n: int = 5) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs of n-token shingles — the
-    explode of ``shingle_arrays``. Same rows as the historic
-    explode + ``.distinct()`` form, without its corpus-sized exchange
-    (see shingle_arrays)."""
-    return shingle_arrays(docs, n).select(
+    """Distinct (doc_id, shingle) pairs of n-token shingles of ``text``."""
+    return docs.select("doc_id", gram_array("text", n).alias("grams")).select(
         "doc_id", F.explode("grams").alias("shingle")
     )
 
 
 def shingles_raw(docs: DataFrame, n: int = 5) -> DataFrame:
-    """(doc_id, shingle) WITH within-doc duplicates — for consumers
-    whose semantics make dedup a no-op: semi-join stream sides
-    (membership only) and build sides that re-``distinct()`` anyway.
-    r13 lesson: the old ``.distinct()`` was a separate operator the
-    optimizer could DROP under a semi join, but ``array_distinct``
-    inside the map expression is invisible to it — so dedup-free
-    consumers must opt out explicitly or they pay the per-doc hash
-    set for nothing (l15 semi-join leg measured 1.02 -> 0.59 s)."""
+    """(doc_id, shingle) WITH within-doc duplicates (see gram_array)."""
     return docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"flatten(transform(array(split(text, ' ')), t ->"
-                f" case when size(t) >= {n} then"
-                f" transform(sequence(1, size(t) - {n - 1}),"
-                f" i -> concat_ws(' ', slice(t, i, {n})))"
-                f" else array() end))"
-            )
-        ).alias("shingle"),
+        "doc_id", F.explode(gram_array("text", n, distinct=False)).alias("shingle")
+    )
+
+
+def gram_keys(docs: DataFrame, key: str, n: int) -> DataFrame:
+    """(key, h1, h2) — one row per distinct n-gram of each row's
+    ``text``, the gram carried as a 128-bit key of two xxhash64 lanes
+    (the l11 md5-gram device, integer-keyed): a per-gram aggregation
+    groups on two longs instead of a ~25-byte string (measured 1.69 s
+    vs 1.22 s for l39's agg at sf0.1) and a gram exchange carries 16
+    bytes per gram at any corpus size.
+
+    The second lane hashes the salt FIRST, ``xxhash64('s', g)``, i.e.
+    the gram under a different seed — the MinHash construction of l3.
+    ``xxhash64(g, 's')`` would seed-chain the salt on the first lane's
+    value, making h2 a function of h1 and the key 64-bit. With two
+    independent lanes the collision bound is ~n²/2^129 (≈1e-15 at
+    10^12 grams), the exactness class of l11's md5 keys.
+    """
+    lanes = F.transform(
+        gram_array("text", n),
+        lambda g: F.struct(
+            F.xxhash64(g).alias("h1"), F.xxhash64(F.lit("s"), g).alias("h2")
+        ),
+    )
+    return docs.select(key, F.explode(lanes).alias("gh")).select(
+        key, "gh.h1", "gh.h2"
     )
 
 
@@ -163,30 +166,15 @@ def l2_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     J = |∩| / (|A|+|B|−|∩|). Exact and deterministic — the correctness
     oracle for L3's probabilistic banding.
 
-    r13 (the l39/l33 single-lineage device): ONE gram lineage keyed by
-    a 128-bit hash pair, per-gram doc sets aggregated once, pairs AND
+    Plan: ONE gram lineage keyed by a 128-bit hash pair (gram_keys),
+    per-gram doc sets aggregated once, pairs AND
     the |sh(·)| diagonal exploded map-side from the sorted set
     (x ≤ y; the self-pair count IS the doc's shingle count), sizes
     attached via two windows over the doc-pair table. The old shape
     derived the gram lineage THREE times (cnt + both join sides) and
     sorted the self-join; fresh 1.87 -> ~1.1 s at sf0.1."""
     d = load_table(spark, sf_dir, "documents")
-    arr = (
-        "array_distinct(flatten(transform(array(split(text, ' ')), t ->"
-        " case when size(t) >= 5 then"
-        " transform(sequence(1, size(t) - 4),"
-        " i -> concat_ws(' ', slice(t, i, 5)))"
-        " else array() end)))"
-    )
-    gs = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform({arr}, g -> struct(xxhash64(g) AS h1,"
-                f" xxhash64(g, 's') AS h2))"
-            )
-        ).alias("gh"),
-    ).select("doc_id", "gh.h1", "gh.h2")
+    gs = gram_keys(d, "doc_id", 5)
     pair_expr = F.expr(
         "flatten(transform(ds, (x, i) ->"
         " transform(slice(ds, i + 1, size(ds)),"
@@ -1320,9 +1308,8 @@ def l33_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership cannot drift between engines; only the reported ratio is
     rounded.
 
-    Scale (r13 rewrite — the l39 single-lineage device): ONE gram
-    lineage, keyed once. Grams ride as a 128-bit hash pair (two
-    xxhash64 lanes, the l11 md5-gram exactness class), ONE
+    Scale: ONE gram lineage, keyed once. Grams ride as a 128-bit hash
+    pair (gram_keys, the l11 md5-gram exactness class), ONE
     shingle-keyed exchange aggregates each gram's doc set, and every
     ORDERED doc pair — self-pairs included — explodes map-side from
     that set: the (a, a) diagonal count IS |sh(A)|, so per-doc sizes
@@ -1336,22 +1323,7 @@ def l33_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; measured fresh 1.84 -> 1.2 s at sf0.1.
     """
     d = load_table(spark, sf_dir, "documents")
-    arr = (
-        "array_distinct(flatten(transform(array(split(text, ' ')), t ->"
-        " case when size(t) >= 4 then"
-        " transform(sequence(1, size(t) - 3),"
-        " i -> concat_ws(' ', slice(t, i, 4)))"
-        " else array() end)))"
-    )
-    gs = d.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform({arr}, g -> struct(xxhash64(g) AS h1,"
-                f" xxhash64(g, 's') AS h2))"
-            )
-        ).alias("gh"),
-    ).select("doc_id", "gh.h1", "gh.h2")
+    gs = gram_keys(d, "doc_id", 4)
     pair_expr = F.expr(
         "flatten(transform(ds, x ->"
         " transform(ds, y -> struct(x AS doc_a, y AS doc_b))))"

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lightcurator_spark import api
 from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table
 
@@ -1801,65 +1802,17 @@ def ml17_chi2_feature_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML17: χ² feature selection — which tokens are DISCRIMINATIVE
     for which language? The feature-ranking verb between the text
     tier and the ML tier: ML3's naive Bayes consumes all tokens; χ²
-    ranks them first (the classic text-classification preprocessing
-    step — drop tokens independent of the class, keep the
-    discriminators). Presence/absence contingency per (token, class):
-    A = docs of the class containing the token, B/C/D the complements,
-    χ² = N(AD−BC)²/((A+B)(C+D)(A+C)(B+D)) — one score per (token,
-    class) cell.
-
-    Exactness: A/B/C/D derive from exact distinct-doc counts (the
-    (doc, token) pair is DISTINCT-ed first — multiple occurrences in
-    one doc count once, the standard presence semantics); the χ²
-    value is one closed-form float expression over exact BIGINTs,
-    identical on both engines, R4. Degenerate margins (token in all
-    docs / class empty) excluded on both sides (TRAPS #22).
-
-    Scale: one scan → distinct (doc, token) explode → one (token,
-    class) partial/final agg; document-frequency totals re-aggregate
-    the same cell table (never the corpus — TRAPS #19); class counts
-    and N are broadcast-size legs. The cell table is |vocab|·|class|,
-    vocabulary-bounded.
+    ranks them first (drop tokens independent of the class, keep the
+    discriminators). Presence/absence contingency per (token, class),
+    χ² = N(AD−BC)²/((A+B)(C+D)(A+C)(B+D)) over exact distinct-doc
+    counts; degenerate margins are excluded on both sides (TRAPS #22).
     """
     docs = load_table(spark, sf_dir, "documents")
-    td = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).distinct()
-    cls = docs.select("doc_id", "lang")
-    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    nc = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_class"))
-    a = td.join(cls, "doc_id").groupBy("token", "lang").agg(
-        F.count(F.lit(1)).alias("a")
-    )
-    dft = a.groupBy("token").agg(F.sum("a").alias("df"))
-    x = (
-        a.join(dft, "token")
-        .join(F.broadcast(nc), "lang")
-        .crossJoin(F.broadcast(n))
-    )
-    A = F.col("a").cast("double")
-    b = (F.col("df") - F.col("a")).cast("double")
-    c = (F.col("n_class") - F.col("a")).cast("double")
-    d = (
-        F.col("n_docs") - F.col("df") - F.col("n_class") + F.col("a")
-    ).cast("double")
-    num = F.col("n_docs").cast("double") * (A * d - b * c) * (A * d - b * c)
-    den = (
-        F.col("df").cast("double")
-        * (F.col("n_docs") - F.col("df"))
-        * F.col("n_class")
-        * (F.col("n_docs") - F.col("n_class"))
-    )
-    return x.filter(
-        (F.col("df") > 0)
-        & (F.col("df") < F.col("n_docs"))
-        & (F.col("n_class") > 0)
-        & (F.col("n_class") < F.col("n_docs"))
-    ).select(
+    return api.chi2_feature_selection(docs, "doc_id", "text", "lang").select(
         "token",
-        "lang",
-        F.col("a").alias("n_docs_with"),
-        R4(num / den).alias("chi2"),
+        F.col("class").alias("lang"),
+        "n_docs_with",
+        R4(F.col("chi2")).alias("chi2"),
     )
 
 

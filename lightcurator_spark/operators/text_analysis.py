@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lightcurator_spark import api
+from lightcurator_spark.operators.dedup import gram_keys
 from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table
 
@@ -408,28 +410,12 @@ def l10_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L10: sliding-window document chunking — the pretraining/RAG
     chunker: 32-token windows every 24 tokens (8-token overlap), each
     chunk fingerprinted for downstream exact-dedup (L1 composes on the
-    output). All map-side: split → sequence → explode → slice; a doc
-    never leaves its partition, so the operator scales linearly with
-    corpus bytes and parallelizes per-document. Trailing chunks may be
-    shorter than the window (both engines' slices clip at the end).
-
-    Window/stride chosen so every sf's shortest doc still emits ≥1
-    chunk (start=0 always exists: sequence(0, n-1, 24) ∋ 0 for n ≥ 1)."""
+    output). Window/stride chosen so every sf's shortest doc still
+    emits ≥1 chunk (start=0 always exists: sequence(0, n-1, 24) ∋ 0
+    for n ≥ 1)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("tokens"))
-    starts = toks.select(
-        "doc_id",
-        "tokens",
-        F.explode(
-            F.sequence(F.lit(0), F.size("tokens") - 1, F.lit(24))
-        ).alias("start"),
-    )
-    chunk = F.slice("tokens", F.col("start") + 1, 32)
-    return starts.select(
-        "doc_id",
-        (F.col("start") / 24).cast("long").alias("chunk_idx"),
-        F.size(chunk).cast("long").alias("n_chunk_tokens"),
-        F.md5(F.array_join(chunk, " ")).alias("chunk_md5"),
+    return api.chunk_tokens(docs, "doc_id", "text", window=32, stride=24).select(
+        "doc_id", "chunk_idx", "n_chunk_tokens", F.md5("chunk_text").alias("chunk_md5")
     )
 
 
@@ -1087,65 +1073,14 @@ def l27_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     production corpora are gated on: per-document mean of
     ln(0.8·P(w₂|w₁) + 0.2·P(w₂)), LM estimated from the corpus itself
     (every observed bigram has count ≥ 1, so the interpolation's
-    backoff term is exercised without zero-prob edge cases).
-
-    Spark shape: bigrams are built MAP-SIDE from each doc's token
-    array (slide via transform over the index range — no positional
-    self-join), then two vocabulary-keyed LM joins (bigram counts,
-    conditioning-unigram counts) and one scalar total broadcast back.
-    The count tables are vocabulary-sized — broadcastable at any
-    corpus scale where the vocab fits (the usual LM regime); the AQE
-    skew path covers Zipf-head tokens otherwise (L14's note).
-
-    Both engines divide the same exact integer counts and ln() the
-    same doubles; only the per-doc avg's summation order differs
-    (~1e-13 on 4-dp-rounded O(1) values).
-    """
+    backoff term is exercised without zero-prob edge cases). Both
+    engines divide the same exact integer counts and ln() the same
+    doubles; only the per-doc avg's summation order differs (~1e-13 on
+    4-dp-rounded O(1) values)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    uni = toks.select(F.explode("t").alias("w"))
-    uc = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    un = uc.agg(F.sum("c").alias("n"))
-    bigrams = toks.filter(F.size("t") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.slice("t", 1, F.size("t") - 1),
-                lambda w, i: F.struct(
-                    w.alias("w1"), F.element_at("t", i + 2).alias("w2")
-                ),
-            )
-        ).alias("bg"),
-    ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    # r13 measured rejection (the ml3 lesson): aggregating per-doc
-    # bigram multiplicities first and re-reading that exchange for the
-    # LM table (ReusedExchange, one bigram explode) won under the
-    # bench profile but LOST under the cluster profile (AQE-on/128)
-    # at both scales — 1x 1.09 -> 1.40, 16x replica 2.94 -> 5.26 —
-    # because this bc leg's map-side combine shuffles only
-    # dictionary-sized partials while the reuse re-reads doc-granular
-    # data. Kept on the map-combined two-lineage shape.
-    bc = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cb"))
-    u1 = uc.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
-    u2 = uc.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
-    scored = (
-        bigrams.join(bc, ["w1", "w2"])
-        .join(F.broadcast(u1), "w1")
-        .join(F.broadcast(u2), "w2")
-        .crossJoin(F.broadcast(un))
-        .select(
-            "doc_id",
-            F.log(
-                F.lit(0.8)
-                * (F.col("cb").cast("double") / F.col("c1").cast("double"))
-                + F.lit(0.2)
-                * (F.col("c2").cast("double") / F.col("n").cast("double"))
-            ).alias("lp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        R4(F.avg("lp")).alias("avg_bigram_logprob"),
+    out = api.bigram_logprob(docs, "doc_id", "text", lam=0.8)
+    return out.select(
+        "doc_id", "n_bigrams", R4(F.col("avg_bigram_logprob")).alias("avg_bigram_logprob")
     )
 
 
@@ -1255,46 +1190,22 @@ def l30_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L30: sequence packing — assign documents to fixed token-budget
     context bins, the pretraining prep step between curation and
     tokenization (pack many short documents into one training sequence
-    to stop padding from dominating the batch). Offset packing: docs
-    are taken in deterministic (doc_id) order, and a doc belongs to
-    bin ``floor(cum_tokens_before / budget)`` — bins fill to ≥ budget
-    with overflow bounded by the longest document, the approximation
-    real pipelines use when a strict sequential packing pass isn't
-    worth it. All arithmetic is integer (whitespace token counts,
-    exclusive prefix sums, integer division), so the bin assignment is
-    hash-exact across engines — no float boundary can flip a doc's
-    bin.
-
-    Scale: packing has no cross-shard dependency — bins are LOCAL by
-    construction — so the window partitions on (source, shard =
-    doc_id div {_L30_SHARD}), never on the low-cardinality source
-    alone: shards scale with the corpus and every executor packs its
-    own shards (the a20/TRAPS#17 lesson applied at design time rather
-    than retrofitted). One exchange on the composite key; the
-    per-shard sort is bounded by shard width.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    t = d.select(
-        "source",
-        F.expr(f"doc_id div {_L30_SHARD}").alias("shard"),
-        "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("toks"),
+    to stop padding from dominating the batch), then census each bin.
+    Offset packing in doc_id order within (source, shard = doc_id div
+    100); all arithmetic is integer, so bin assignment is hash-exact
+    across engines. The bin census aggregates on the window's own
+    (source, shard) clustering — one exchange."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "source", "doc_id", F.size(F.split("text", " ")).cast("long").alias("toks")
     )
-    wprev = (
-        Window.partitionBy("source", "shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    packed = api.pack_sequences(
+        d, "source", "doc_id", "toks", budget=_L30_BUDGET, shard_width=_L30_SHARD
     )
-    c = t.withColumn("cb", F.coalesce(F.sum("toks").over(wprev), F.lit(0)))
-    return (
-        c.withColumn("bin_idx", F.expr(f"cb div {_L30_BUDGET}"))
-        .groupBy("source", "shard", "bin_idx")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("toks").alias("total_tokens"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
+    return packed.groupBy("source", "shard", "bin_idx").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("toks").alias("total_tokens"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 
@@ -1457,45 +1368,10 @@ def l32_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine-generated / template / boilerplate-flooded sources (slope
     near 0: uniform vocabulary; steeply below −1: a few tokens
     dominate). The standard pretraining-mix screen run per source
-    shard before L16 mixing.
-
-    Scale: term frequencies partial/final-agg on the (source, token)
-    key — the only corpus-sized shuffle; ranking and the regression
-    see VOCABULARY-sized rows only (the rank window partitions by
-    source over ~|vocab| rows per source, never raw tokens — the
-    TRAPS #17 discipline holds because the input is pre-reduced).
-    Rank ties break on the token string so both engines rank
-    identically; the closed-form slope divides sums of the same
-    doubles, 4-dp rounded.
-    """
+    shard before L16 mixing."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("source", F.explode(F.split("text", " ")).alias("token"))
-    tf = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("source").orderBy(F.col("cnt").desc(), "token")
-    top = (
-        tf.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 20)
-        .select(
-            "source",
-            F.log(F.col("rnk").cast("double")).alias("x"),
-            F.log(F.col("cnt").cast("double")).alias("y"),
-        )
-    )
-    m = top.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    n = F.col("n")
-    return m.select(
-        "source",
-        n.alias("n_terms"),
-        R4(
-            (n * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (n * F.col("sxx") - F.col("sx") * F.col("sx"))
-        ).alias("zipf_slope"),
+    return api.zipf_slope(d, "source", "text", top_k=20).select(
+        "source", "n_terms", R4(F.col("zipf_slope")).alias("zipf_slope")
     )
 
 
@@ -1533,52 +1409,12 @@ def l38_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     text-curation family: L11/L34 measure duplication against the
     whole corpus, L38 measures marginal contribution at ingest time —
     the statistic behind "is this crawl snapshot still adding
-    anything" dedup-budget decisions. First occurrence is an exact
-    min(doc_id) per gram; novelty = novel/total distinct grams, one
-    final division, R4. Docs shorter than 3 tokens have no grams and
-    no row (the shingles() empty-array clip, TRAPS #20); every other
-    doc appears even at novelty 0.
-
-    Scale (r12 optimization, guide §2.4 — remove shuffles outright):
-    a doc's novel-gram count is exactly the number of grams whose
-    min(doc_id) IS that doc, so the first-occurrence dictionary can be
-    re-aggregated by its winner directly — the old plan joined the
-    dictionary back onto the full gram table (a second corpus explode
-    + a dictionary-sized broadcast, impossible at 100 TB where the
-    gram dictionary is corpus-sized).
-
-    r13 (the judge's item 3, guide §2.3/§2.4): within-doc gram dedup
-    moved INTO the map expression (shingle_arrays/array_distinct), so
-    the two corpus-sized (doc, gram) distinct exchanges — one per
-    leg — are gone; gram strings now cross the network exactly once
-    (the min-agg exchange, map-side combined). A fully map-side
-    per-doc leg (size(grams), zero exchanges) was MEASURED and
-    REJECTED: fresh 1.60 -> 1.42 s but warm 0.045 -> 0.55 s, because
-    a leg with no exchange re-executes its split+gram build on every
-    warm pass while the aggregated form re-reads its shuffle stage.
-    The r12 docstring's "ReusedExchange" claim was wrong (the two
-    legs aggregate on different keys straight off the Generate — no
-    exchange can be shared); the per-doc totals leg keeps its own
-    scan+explode, now without the distinct.
-    """
-    from lightcurator_spark.operators.dedup import shingles
-
+    anything" dedup-budget decisions. Docs shorter than 3 tokens have
+    no grams and no row (TRAPS #20); every other doc appears even at
+    novelty 0."""
     d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d, 3)
-    per_doc = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    novel = (
-        sh.groupBy("shingle")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_novel"))
-    )
-    return per_doc.join(novel, "doc_id", "left").select(
-        "doc_id",
-        "n_grams",
-        F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
-        R4(
-            F.coalesce("n_novel", F.lit(0)) / F.col("n_grams").cast("double")
-        ).alias("novelty"),
+    return api.ngram_novelty(d, "doc_id", "text", n=3).select(
+        "doc_id", "n_grams", "n_novel", R4(F.col("novelty")).alias("novelty")
     )
 
 
@@ -1625,9 +1461,9 @@ def l39_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pairs sharing nothing emit no row — absence IS the clean verdict
     (sparse output, DQ6's rationale inverted).
 
-    Scale (r13 rewrite — the judge's item 2, guide §2.3/§2.4 and the
-    L11 one-lineage device): ONE gram lineage, keyed once. Grams build
-    map-side with the source attached (no doc→source join-back, no
+    Scale (the L11 one-lineage device): ONE gram lineage, keyed once.
+    Grams build map-side as 128-bit keys (gram_keys) with the source
+    attached (no doc→source join-back, no
     (source, shingle) distinct exchange — within-doc dedup is
     array_distinct in the map expression), then ONE shingle-keyed
     exchange aggregates each gram's distinct source set
@@ -1639,37 +1475,12 @@ def l39_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagonal IS the vocab — one aggregation produces the whole
     matrix). Fan-out per gram is k + C(k, 2) with k ≤ |sources|
     (measured at sf0.1: 303 k lanes over 211 k grams, max k = 6,
-    bounded by the source count at any corpus size). The ≤ s² matrix
-    is localCheckpoint-materialized (≤ 210 rows here) so its three
-    consumers (pairs, va, vb) never re-run the corpus lineage, and
-    the vocab legs attach by broadcast. The old plan: two gram
-    explodes, two (source, shingle) distinct exchanges, a doc-keyed
-    join-back, and a shingle self-join with two sorted exchanges.
+    bounded by the source count at any corpus size). The vocab
+    diagonal attaches through two windows over the ≤ s² matrix rows,
+    so the corpus lineage is derived once.
     """
     d = load_table(spark, sf_dir, "documents")
-    # Grams ride as a 128-bit hash pair (two independent xxhash64
-    # lanes — the l11 md5-gram device, integer-keyed): the per-gram
-    # source-set aggregation groups on two longs instead of a ~25-byte
-    # string, measured 1.69 -> 1.22 s for the agg at sf0.1, and the
-    # shingle exchange carries 16 bytes/gram at any corpus size.
-    # Collision bound ~n²/2^129 (≈1e-15 at 10^12 grams) — the same
-    # exactness class as l11's md5 keys.
-    arr = (
-        "array_distinct(flatten(transform(array(split(text, ' ')), t ->"
-        " case when size(t) >= 4 then"
-        " transform(sequence(1, size(t) - 3),"
-        " i -> concat_ws(' ', slice(t, i, 4)))"
-        " else array() end)))"
-    )
-    gs = d.select(
-        "source",
-        F.explode(
-            F.expr(
-                f"transform({arr}, g -> struct(xxhash64(g) AS h1,"
-                f" xxhash64(g, 's') AS h2))"
-            )
-        ).alias("gh"),
-    ).select("source", "gh.h1", "gh.h2")
+    gs = gram_keys(d, "source", 4)
     # sorted distinct source array per gram → (x, y) with x <= y
     # enumerates each unordered pair once, self-pairs included (the
     # diagonal = per-source vocab), map-side (the q26 pair device)
@@ -1761,84 +1572,12 @@ FROM (
 
 @query("l40_bm25_retrieval", oracle=_L40_ORACLE)
 def l40_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L40: BM25 top-5 retrieval (k1=1.2, b=0.75) for a fixed query set.
-
-    The classic lexical retrieval scorer a training-data pipeline uses
-    for decontamination lookups and RAG-corpus indexing. Plan shape:
-    one token explode feeds tf / dl / df; corpus stats (N, avgdl) stay
-    a 1-row aggregate leg cross-joined in (never a driver scalar); the
-    tiny query-term table broadcasts onto the token-keyed tf table, so
-    the only big shuffle is the tf/df groupBys on the token key —
-    identical to l6_tfidf's bounded shape at 100 TB.
-
-    Float discipline: each per-term partial score quantizes to BIGINT
-    1e-4 units BEFORE the per-(query, doc) sum (integer addition is
-    associative; double addition is not — TRAPS quantize-before-sum
-    rule), and ranking orders by the integer units, doc_id tie-break.
-    """
+    """L40: BM25 top-5 retrieval (k1=1.2, b=0.75) for a fixed query set
+    — the classic lexical retrieval scorer a training-data pipeline
+    uses for decontamination lookups and RAG-corpus indexing."""
     d = load_table(spark, sf_dir, "documents")
     qt = spark.createDataFrame(_BM25_QUERY_TERMS, "query_id INT, term STRING")
-    # isnotnull(doc_id) guard (r13, the q21/ml3 device): the dl join
-    # pushes isnotnull(doc_id) into the scoring leg's tf subtree only,
-    # leaving dl/stats with a different canonical subtree and their
-    # own corpus explode (observed: 3 explodes, 1 reuse). doc_id is
-    # never null in the corpus, so rows are unchanged and the legs
-    # share ONE exchange.
-    tok = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("doc_id").isNotNull())
-    # dl / df / corpus stats DERIVE from tf (sum-of-tf = doc length,
-    # count-of-rows = doc frequency) instead of re-exploding the
-    # corpus per leg — the (doc, token) exchange becomes the shared
-    # upstream planned once and reused (leg-reuse audit, round 7).
-    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    # the tf >= 1 tautology is load-bearing: without a reference to
-    # the tf value, RemoveRedundantAggregates collapses this leg to a
-    # distinct over a THIRD corpus explode instead of re-reading tf's
-    # exchange (observed — the ml3 vocab-leg collapse, here the worse
-    # trade because tf's exchange is right there to reuse).
-    dfreq = (
-        tf.filter(F.col("tf") >= 1)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("nd"),
-        F.avg(F.col("dl").cast("double")).alias("avgdl"),
-    )
-    idf = F.log(F.lit(1) + (F.col("nd") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    raw = idf * (F.col("tf") * 2.2) / (
-        F.col("tf") + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))
-    )
-    term_score = (
-        tf.join(F.broadcast(qt), tf.token == qt.term)
-        .join(dfreq.join(F.broadcast(qt.select("term").distinct()),
-                         dfreq.token == F.col("term")).select("token", "df"),
-              "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "query_id", "doc_id",
-            F.floor(raw * 10000 + F.lit(0.5)).cast("long").alias("units"),
-        )
-    )
-    scored = term_score.groupBy("query_id", "doc_id").agg(
-        F.sum("units").alias("score_units")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_units").desc(), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select(
-            "query_id",
-            "doc_id",
-            (F.col("score_units").cast("double") / 10000).alias("bm25"),
-            "rn",
-        )
-    )
+    return api.bm25_retrieve(d, "doc_id", "text", qt, k=5, k1=1.2, b=0.75)
 
 
 # L41: DSIR-style data-selection importance weights (Xie et al. 2023,
@@ -1881,70 +1620,18 @@ def l41_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L41: DSIR importance weights — per-document log p_target(x) −
     log p_raw(x) under Laplace-smoothed unigram LMs, the published
     importance-resampling score for selecting pretraining data that
-    matches a target domain (here: the 'en' slice).
-
-    Plan shape: ONE token explode feeds all four legs — per-doc tf,
-    raw counts, target counts, and the 1-row totals aggregate (kept a
-    lazy cross-join leg, never a driver scalar). The scoring join is
-    tf ⋈ raw ⋈ target on the token key — the same Zipf-keyed shuffle
-    as l6_tfidf, partial-aggregated map-side; at 100 TB the LM tables
-    are vocabulary-sized (≪ corpus) and broadcast.
-
-    Float discipline: the per-token log-ratio quantizes to BIGINT 1e-6
-    units BEFORE the tf multiply and per-doc sum (integer arithmetic
-    is associative — TRAPS quantize-before-sum); one divide at export.
-    """
+    matches a target domain (here: the 'en' slice), joined back to the
+    document's lang and length. The oracle rounds the integer 1e-6
+    units, so they are recovered exactly (|units| ≪ 2^50) before the
+    one divide."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("token")
-    )
-    # both LMs and the totals DERIVE from tf (sum-of-tf = occurrence
-    # counts) instead of re-exploding the corpus per leg — the
-    # (doc, lang, token) exchange is the shared upstream AQE can
-    # reuse (the l40 leg-reuse discipline). r13 examined the
-    # q21/ml3 isnotnull-guard device here and measured NO structural
-    # change (still 3 explodes / 1 reuse: the lang='en' target leg
-    # keeps its own pruned lineage deliberately — the pushed filter
-    # is worth more than reuse — and the totals leg's multi-distinct
-    # rewrite specializes its subtree regardless); left as is.
-    tf = tok.groupBy("doc_id", "lang", "token").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    raw_cnt = tf.groupBy("token").agg(F.sum("tf").alias("cr"))
-    tgt_cnt = (
-        tf.filter(F.col("lang") == "en")
-        .groupBy("token")
-        .agg(F.sum("tf").alias("ct"))
-    )
-    tot = tf.agg(
-        F.sum("tf").cast("double").alias("tr"),
-        F.sum(F.when(F.col("lang") == "en", F.col("tf")).otherwise(0))
-        .cast("double")
-        .alias("tt"),
-        F.countDistinct("token").cast("double").alias("v"),
-    )
-    log_ratio = F.log(
-        (F.coalesce(F.col("ct"), F.lit(0)) + 1.0) / (F.col("tt") + F.col("v"))
-    ) - F.log((F.col("cr") + 1.0) / (F.col("tr") + F.col("v")))
-    units = (
-        tf.join(raw_cnt, "token")
-        .join(tgt_cnt, "token", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "doc_id",
-            (
-                F.col("tf")
-                * F.floor(log_ratio * 1e6 + F.lit(0.5)).cast("long")
-            ).alias("units"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("units").alias("units"))
-    )
-    return units.join(d.select("doc_id", "lang", "n_chars"), "doc_id").select(
+    w = api.dsir_weights(d, "doc_id", "text", F.col("lang") == "en")
+    units = F.round(F.col("log_ir_weight") * 1e6).cast("long")
+    return w.join(d.select("doc_id", "lang", "n_chars"), "doc_id").select(
         "doc_id",
         "lang",
         "n_chars",
-        (F.floor(F.col("units").cast("double") / 100 + F.lit(0.5)) / 10000).alias(
+        (F.floor(units.cast("double") / 100 + F.lit(0.5)) / 10000).alias(
             "log_ir_weight"
         ),
     )
@@ -1979,45 +1666,19 @@ FROM u CROSS JOIN tot
 
 @query("l43_temperature_mixture", oracle=_L43_ORACLE)
 def l43_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L43: temperature-scaled source mixture — w_s ∝ n_tokens^0.7
-    (the GPT-3/PaLM sampling rule that flattens the source size
-    distribution so small high-quality sources aren't drowned), the
+    """L43: temperature-scaled source mixture — w_s ∝ n_tokens^0.7, the
     per-source share of a 100k-token budget, and the oversampling
-    factor each source would see (>1 = the source repeats within one
-    budget epoch). L16 APPLIES given rates deterministically; L43
-    COMPUTES the rates — together they close the mixing loop.
-
-    Plan shape: one map-side token count partial-aggregated to a
-    source-sized table; everything after (pow, shares, budget) is
-    arithmetic over that tiny table with the unit total cross-joined
-    as a 1-row leg. At 100 TB the corpus is touched exactly once.
-
-    Float discipline: pow(n, 0.7) quantizes to BIGINT 1e-6 units per
-    source BEFORE the total (one floor per source — boundary-risk
-    negligible); shares divide the integer units once at export.
-    """
+    factor each source would see. L16 APPLIES given rates
+    deterministically; L43 COMPUTES the rates — together they close
+    the mixing loop."""
     d = load_table(spark, sf_dir, "documents")
-    s = d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens"),
-    )
-    u = s.withColumn(
-        "units",
-        F.floor(
-            F.pow(F.col("n_tokens").cast("double"), 0.7) * 1e6 + F.lit(0.5)
-        ).cast("long"),
-    ).localCheckpoint(eager=False)  # the total leg re-reads 20 cells, not the corpus
-    tot = u.agg(F.sum("units").alias("tu"))
-    share = F.col("units").cast("double") / F.col("tu")
-    return u.crossJoin(F.broadcast(tot)).select(
+    return api.mixture_weights(d, "source", "text", alpha=0.7, token_budget=100000).select(
         "source",
         "n_docs",
         "n_tokens",
-        R4(share * 1).alias("mix_share"),
-        F.floor(F.lit(100000) * share + F.lit(0.5)).cast("long").alias(
-            "tokens_at_budget"
-        ),
-        R4(F.lit(100000) * share / F.col("n_tokens")).alias("oversample_x"),
+        R4(F.col("mix_share")).alias("mix_share"),
+        "tokens_at_budget",
+        R4(F.col("oversample_x")).alias("oversample_x"),
     )
 
 
@@ -2075,70 +1736,20 @@ def l44_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus mix? Per source: docs/tokens before and after global
     content-hash dedup (keeper = min doc_id per md5(text), L1's exact
     contract), the per-source dup rate, and the share DRIFT — the
-    survivorship-bias number (dedup removes mass unevenly: a source
-    that syndicates widely loses docs to earlier keepers, so its
-    post-dedup share drops without anyone deciding that). L16's
-    mixing weights are computed AFTER dedup in a real pipeline —
-    L44 is the audit that says how much the dedup step silently
-    re-weighted the mix (the composition L1→L37 measures as KL; here
-    the attribution is per-source and in exact counts).
-
-    Keeper attribution is part of the pinned contract: a duplicate
-    group's surviving mass belongs to the KEEPER's source (min
-    doc_id — deterministic on both engines), so cross-source
-    duplicate groups shift mass between sources, which is exactly
-    the effect under audit. Sources losing ALL docs to earlier
-    keepers survive with zeros (left join + coalesce — the DQ6
-    null-discipline). Counts exact; rates/shares single divisions R4.
-
-    Scale: one documents scan feeds both legs (lazy localCheckpoint);
-    dedup is one hash-keyed window (L1's plan), both censuses are
-    partial/final aggs to ≤|sources| cells; totals ride broadcast
-    1-row legs — no corpus-sized state after the dedup shuffle.
-    """
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.md5(F.col("text").cast("binary")).alias("h"),
-        F.size(F.split("text", " ")).cast("long").alias("ntok"),
-    ).localCheckpoint(eager=False)
-    w = Window.partitionBy("h").orderBy("doc_id")
-    keep = (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    pre = d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("docs_before"),
-        F.sum("ntok").alias("tokens_before"),
-    )
-    post = keep.groupBy("source").agg(
-        F.count(F.lit(1)).alias("docs_after"),
-        F.sum("ntok").alias("tokens_after"),
-    )
-    joined = pre.join(post, "source", "left").select(
-        "source",
-        "docs_before",
-        F.coalesce("docs_after", F.lit(0)).alias("docs_after"),
-        "tokens_before",
-        F.coalesce("tokens_after", F.lit(0)).alias("tokens_after"),
-    ).localCheckpoint(eager=False)  # totals leg re-reads ~20 cells
-    tot = joined.agg(
-        F.sum("docs_before").alias("tb"), F.sum("docs_after").alias("ta")
-    )
-    sb = F.col("docs_before") / F.col("tb").cast("double")
-    sa = F.col("docs_after") / F.col("ta").cast("double")
-    return joined.crossJoin(F.broadcast(tot)).select(
-        "source",
+    survivorship-bias number (a source that syndicates widely loses
+    docs to earlier keepers, so its post-dedup share drops without
+    anyone deciding that). A duplicate group's surviving mass belongs
+    to the KEEPER's source; sources losing ALL docs survive with
+    zeros. Counts exact; rates/shares single divisions R4."""
+    d = load_table(spark, sf_dir, "documents")
+    return api.dedup_impact(d, "source", "text", "doc_id").select(
+        F.col("group").alias("source"),
         "docs_before",
         "docs_after",
         "tokens_before",
         "tokens_after",
-        R4(1 - F.col("docs_after") / F.col("docs_before").cast("double")).alias(
-            "dup_rate"
-        ),
-        R4(sb).alias("share_before"),
-        R4(sa).alias("share_after"),
-        R4(sa - sb).alias("share_drift"),
+        *[R4(F.col(c)).alias(c) for c in
+          ("dup_rate", "share_before", "share_after", "share_drift")],
     )
 
 

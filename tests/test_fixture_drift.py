@@ -184,3 +184,21 @@ def test_table_rowcount_walks_partitioned_directory(tmp_path):
     (tmp_path / "empty.parquet").mkdir()
     with pytest.raises(FileNotFoundError):
         table_rowcount(str(tmp_path), "empty")
+
+
+# Join and group keys whose null-freedom an operator relies on: q21's
+# isNotNull pre-filter and w16's groupBy+count (which, unlike the
+# countDistinct it replaced, would count a NULL user_id group) return
+# the oracle's rows only while these columns hold no nulls.
+NULL_FREE_KEYS = {"lineitem": ["l_orderkey", "l_suppkey"], "events": ["user_id"]}
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_q21_w16_keys_are_null_free(sf_dir):
+    for table, cols in NULL_FREE_KEYS.items():
+        t = pq.read_table(f"{sf_dir}/{table}.parquet", columns=cols)
+        nulls = {c: t.column(c).null_count for c in cols}
+        assert not any(nulls.values()), (
+            f"{table} keys now carry nulls {nulls}: re-check q21's "
+            "isNotNull pre-filter and w16's groupBy+count against their oracles"
+        )

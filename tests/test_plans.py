@@ -347,6 +347,15 @@ def executed_plan(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def final_plan(df) -> str:
+    """`df`'s executed plan after a collect, without the pre-reuse
+    initial plan that an AQE plan's string also carries (node counts
+    would double)."""
+    df.collect()
+    ep = df._jdf.queryExecution().executedPlan().toString()
+    return ep.split("== Initial Plan ==", 1)[0]
+
+
 def test_scalar_threshold_reuses_fact_exchange(spark):
     """Q15/Q11-shapes: the GLOBAL scalar threshold (max / 1.05×avg) is
     a distributed `agg` over the grouped result, broadcast back via
@@ -1812,3 +1821,82 @@ def test_l31b_candidate_join_is_exchange_free_on_the_term_key(spark):
     assert "hashpartitioning(g#" not in p, p
     assert "hashpartitioning(doc_a" in p, p  # the pair agg remains
     assert "CartesianProduct" not in p, p
+
+
+def _query_or_api(spark, surface: str, name: str, call):
+    """Registry query `name`, or `call` (its api body) applied directly
+    to the documents table: both surfaces must keep the tuned shape."""
+    from lightcurator_spark.registry import load_table
+
+    if surface == "query":
+        return SPECS[name].fn(spark, SF_DIR)
+    return call(load_table(spark, SF_DIR, "documents"))
+
+
+@pytest.mark.parametrize("surface", ["query", "api"])
+def test_l40_bm25_reads_documents_once_with_one_explode(spark, surface):
+    """tf, dl, df and the corpus stats all re-read ONE (doc, token)
+    exchange: one documents scan, one token explode."""
+    from lightcurator_spark import api
+    from lightcurator_spark.operators.text_analysis import _BM25_QUERY_TERMS
+
+    qt = spark.createDataFrame(_BM25_QUERY_TERMS, "query_id INT, term STRING")
+    df = _query_or_api(
+        spark, surface, "l40_bm25_retrieval",
+        lambda d: api.bm25_retrieve(d, "doc_id", "text", qt, k=5),
+    )
+    ep = final_plan(df)
+    assert ep.count("FileScan") == 1, ep
+    assert ep.count("Generate ") == 1, ep
+
+
+@pytest.mark.parametrize("surface", ["query", "api"])
+def test_l43_mixture_reads_documents_once(spark, surface):
+    """The unit-total leg re-reads the checkpointed source cells, never
+    the corpus: at most one documents scan in the plan (none when the
+    checkpoint has already cut the lineage)."""
+    from lightcurator_spark import api
+
+    df = _query_or_api(
+        spark, surface, "l43_temperature_mixture",
+        lambda d: api.mixture_weights(d, "source", "text"),
+    )
+    assert final_plan(df).count("FileScan") <= 1
+
+
+@pytest.mark.parametrize("surface", ["query", "api"])
+def test_l38_novelty_has_no_doc_gram_exchange(spark, surface):
+    """Within-doc gram dedup is array_distinct in the map expression:
+    every exchange is keyed on ONE column, never (doc, gram)."""
+    import re
+
+    from lightcurator_spark import api
+
+    df = _query_or_api(
+        spark, surface, "l38_ngram_novelty",
+        lambda d: api.ngram_novelty(d, "doc_id", "text", n=3),
+    )
+    keys = re.findall(r"hashpartitioning\(([^)]*)\)", final_plan(df))
+    assert keys and all(k.count(",") == 1 for k in keys), keys
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["l2_shingle_jaccard", "l33_shingle_containment", "l39_source_overlap_matrix"],
+)
+def test_gram_key_lanes_hash_salt_before_gram(spark, name):
+    """The 128-bit gram key's second lane must be xxhash64('s', g): the
+    gram hashed under a different seed. Spark chains multi-argument
+    xxhash64 through the seed, so xxhash64(g, 's') is a function of
+    the first lane's xxhash64(g) and the key is really 64-bit (an
+    n²/2^65 collision bound instead of n²/2^129)."""
+    import re
+
+    p = SPECS[name].fn(spark, SF_DIR)._jdf.queryExecution().analyzed().toString()
+    calls = [
+        [a.strip() for a in args.split(",")][:-1]  # last is the seed
+        for args in re.findall(r"xxhash64\(([^()]*)\)", p)
+    ]
+    salted = [c for c in calls if len(c) > 1]
+    assert salted, calls
+    assert all(not c[0].startswith("lambda") for c in salted), calls
