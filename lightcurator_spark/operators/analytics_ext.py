@@ -2273,8 +2273,8 @@ def w16_rolling_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus shuffles ONCE into the (hour, user) cell agg
     (map-side combine first); the 24× explode runs map-side on the
     reduced cell table; the final count distinct is an EXPLICIT
-    two-level aggregate (groupBy(e, user) → groupBy(e)). r13 probe
-    (scripts/r13_w16_probe.py, VERDICT item 6): Spark's own
+    two-level aggregate (groupBy(e, user) → groupBy(e)). Measured
+    with per-Exchange SQLMetrics (VERDICT item 6): Spark's own
     single-distinct rewrite already produces the identical shuffle
     volume (measured per-Exchange SQLMetrics: 1,866,695 records /
     15.4 MB at sf0.1 and 29.9 M / 236.5 MB at the 16x replica, equal

@@ -70,7 +70,10 @@ Guarantees (each one tested):
   (file, key) anti-join at scan time, `count_snapshot` subtracts,
   the change feed emits row-level deletes, and OPTIMIZE
   (commit_replace) materializes DVs away (a removed file's DV dies
-  with it in the fold).
+  with it in the fold). Up to `inline_max` matched keys, both verbs
+  take their contract checks and inline payload from one bounded
+  collect and run three to four Spark jobs; past it the checks run
+  distributed and the keys go to a sidecar parquet.
 - **Snapshot tags** (round 10): `create_tag` binds a NAME to a
   version as a RETENTION PIN — vacuum keeps its files below the
   horizon, prune_log never retires the entries/checkpoint it re-folds
@@ -105,6 +108,9 @@ from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table
 
 from lightcurator_spark.scratch import SCRATCH_ROOT as _SCRATCH
+
+# the footer key Spark stores its row schema under (see TxLogTable._scan)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class _LogState(NamedTuple):
@@ -195,10 +201,7 @@ class TxLogTable:
         if not st.active:
             return df, {}
         newest = max(st.active, key=self._file_commit_version)
-        sample = os.path.join(self.path, newest)
-        have = dict(
-            df.sparkSession.read.parquet(sample).dtypes
-        )  # footer-only
+        have = dict(self._scan(df.sparkSession, [newest]).dtypes)
         for name, spec in st.added.items():
             have.setdefault(name, spec["type"])
         for p in st.dropped:
@@ -1569,12 +1572,14 @@ class TxLogTable:
         spark: SparkSession, schema: T.StructType, columns: list[list]
     ) -> DataFrame:
         """A driver-built relation (one Python list per field of
-        `schema`) shipped as Arrow: it plans as a LocalTableScan, so
-        joining or broadcasting it runs no Spark job and starts no
-        Python worker — a list-built createDataFrame is a pickled-row
-        RDD whose broadcast launches a job through the Python runner.
-        Field types map through Spark's own Arrow schema conversion,
-        so the relation carries exactly `schema`'s types."""
+        `schema`) shipped as Arrow: it plans as a LocalTableScan and
+        starts no Python worker — a list-built createDataFrame is a
+        pickled-row RDD scanned through the Python runner. Building
+        it runs no Spark job; broadcasting it still runs one small
+        one, because the broadcast exchange gathers every child plan,
+        a LocalTableScan included, through an RDD. Field types map
+        through Spark's own Arrow schema conversion, so the relation
+        carries exactly `schema`'s types."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -1582,6 +1587,38 @@ class TxLogTable:
             dict(zip(schema.names, columns)), schema=to_arrow_schema(schema)
         )
         return spark.createDataFrame(table, schema)
+
+    def _scan(self, spark: SparkSession, files: list[str]) -> DataFrame:
+        """`spark.read.parquet` over table files, given the schema
+        Spark wrote into the first file's footer. Spark's own schema
+        inference reads the same footer key, but through a Spark job;
+        supplying the schema makes building the read job-free. A
+        footer without the key (a file written by another engine)
+        falls back to inference."""
+        import pyarrow.parquet as pq
+
+        paths = [os.path.join(self.path, f) for f in files]
+        raw = (pq.read_schema(paths[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if raw is None:
+            return spark.read.parquet(*paths)
+        schema = T.StructType.fromJson(json.loads(raw))
+        return spark.read.schema(schema).parquet(*paths)
+
+    @staticmethod
+    def _dvs_for_keys(dvs: dict, keys) -> dict:
+        """The inline DV pairs whose key is in `keys`. A pair kills
+        rows of its own key only, so a scan that keeps just the rows
+        keyed in `keys` is exact with these pairs alone, and most
+        often there are none, so the scan needs no DV join. Keys
+        compare as Python values, which agrees with Spark's equality
+        while all of them are int or all str (DV keys are the table
+        key's JSON values); any other mix keeps every pair."""
+        kinds = {type(k) for ks in dvs.values() for k in ks}
+        kinds |= {type(k) for k in keys if k is not None}
+        if len(kinds) > 1:
+            return dvs
+        wanted = set(keys)
+        return {f: [k for k in ks if k in wanted] for f, ks in dvs.items()}
 
     @classmethod
     def _key_list_df(cls, spark: SparkSession, keys) -> DataFrame:
@@ -1603,14 +1640,21 @@ class TxLogTable:
     ) -> DataFrame | None:
         """The folded DV set as a (__dv_file, __dv_key) DataFrame —
         inline pairs as an Arrow-built local relation (see _local_df:
-        its broadcast costs no job), sidecar pairs scanned from their
-        parquet (never driver-materialized). `ktype` is the key
-        column's Spark type as the scan presents it, so both join
+        no Python worker), sidecar pairs scanned from their parquet
+        with this fixed two-column schema, so building the scan runs
+        no inference job (never driver-materialized). `ktype` is the
+        key column's Spark type as the scan presents it, so both join
         sides compare without a cast. `files` restricts the INLINE
         pairs to the scanned subset (an optimization only — the DV
         join is per-file, so pairs of unscanned or dead files are
         no-ops); sidecar scans are left whole for the same reason.
         Returns None when the table carries no DVs at this state."""
+        schema = T.StructType(
+            [
+                T.StructField("__dv_file", T.StringType()),
+                T.StructField("__dv_key", ktype),
+            ]
+        )
         parts = []
         pair_files, pair_keys = [], []
         for f in files if files is not None else dvs:
@@ -1618,21 +1662,12 @@ class TxLogTable:
             pair_files.extend([f] * len(ks))
             pair_keys.extend(ks)
         if pair_keys:
-            schema = T.StructType(
-                [
-                    T.StructField("__dv_file", T.StringType()),
-                    T.StructField("__dv_key", ktype),
-                ]
-            )
             parts.append(
                 self._local_df(spark, schema, [pair_files, pair_keys])
             )
         for sc in sorted(dv_side):
             parts.append(
-                spark.read.parquet(os.path.join(self.path, sc)).select(
-                    F.col("__dv_file").cast("string"),
-                    F.col("__dv_key").cast(ktype),
-                )
+                spark.read.schema(schema).parquet(os.path.join(self.path, sc))
             )
         if not parts:
             return None
@@ -1657,6 +1692,9 @@ class TxLogTable:
         - files are grouped by their footer's column-name set (pure
           metadata — the same O(files) footer pass a mergeSchema read
           pays, but decisive instead of merge-lucky);
+        - each group is scanned with the Spark schema stored in its
+          first file's footer (_scan), so building the read runs no
+          schema-inference job;
         - a group that physically CARRIES an added column reads it
           verbatim — stored NULLs stay NULL (the Delta default-column
           rule: defaults apply only where the column is ABSENT, never
@@ -1677,8 +1715,8 @@ class TxLogTable:
         source-file match as its residual condition: the URI
         normalization runs only on rows whose key carries a DV. Inline
         DV pairs arrive as an Arrow local relation, so a scan below
-        DV_BROADCAST_MAX folded DV rows broadcasts them without a
-        Spark job or a Python worker; past that bound the anti-join
+        DV_BROADCAST_MAX folded DV rows broadcasts them with one small
+        Spark job and no Python worker; past that bound the anti-join
         shuffles (dv_debt() names the moment to OPTIMIZE).
         `dv_override` — a (dvs, dv_side) pair — lets CDC reads pin
         DVs from a different version than the schema.
@@ -1707,7 +1745,7 @@ class TxLogTable:
         out = None
         carry_file = with_file or has_dv
         for present, fs in groups.items():
-            df = spark.read.parquet(*[os.path.join(self.path, f) for f in fs])
+            df = self._scan(spark, fs)
             if carry_file:
                 # captured at scan time — the hidden _metadata column
                 # does not survive a union
@@ -2057,9 +2095,9 @@ class TxLogTable:
             added.extend(e.get("add", []))
         if added:
             hit = _keys_hit(
-                spark.read.parquet(
-                    *[os.path.join(self.path, f) for f in added]
-                ).select(F.col(key_phys).alias("__dv_key"))
+                self._scan(spark, added).select(
+                    F.col(key_phys).alias("__dv_key")
+                )
             )
             if hit:
                 raise ValueError(
@@ -2080,26 +2118,34 @@ class TxLogTable:
         st: "_LogState",
         verb: str,
         inline_max: int | None,
+        table_wide: bool,
     ):
         """Shared MoR targeting finish: validate the matched
-        (__dv_file, __dv_key) set and build the commit's `dv` payload
-        — all DISTRIBUTED (r10 verdict fix #1: no `.collect()` of the
-        matched rows, no `isin` literal in any plan; the driver only
-        ever sees per-file COUNTS). Contract checks (all one Spark
-        job each over the materialized targeting result):
+        (__dv_file, __dv_key) set and build the commit's `dv` payload.
+        Contract checks, in this order:
 
         - key dtype must be integral or string (JSON-portable, and the
           sidecar schema's stability contract);
-        - matched keys distinct (unique among matched rows);
-        - matched keys unique TABLE-WIDE (a semi-count over the
-          snapshot equals the matched count);
+        - at least one row matched;
+        - matched keys distinct (a NULL key counts as one value);
+        - with `table_wide`, matched keys unique TABLE-WIDE: the
+          snapshot rows carrying a matched key number exactly the
+          matched rows. upsert_mor skips it because its `matched` is
+          by construction every snapshot row keyed in the delta;
         - every targeted file is in the active set.
 
-        Payload form: ≤ inline_max matched keys → the classic inline
-        {file: [keys]} JSON map (human-readable log, zero extra
-        files); above it → keys written to a `_dv/` SIDECAR parquet
-        (file, key), the entry holding per-file counts only — a 10⁶-
-        key delta costs O(1) driver memory and log-entry bytes.
+        One bounded collect decides the payload form first: at most
+        `inline_max + 1` matched pairs reach the driver in one Spark
+        job (toArrow gathers a limit inside one job; collect() of a
+        limit scans in rounds, a job each). At or under `inline_max`
+        every check runs on that list, the table-wide count probes
+        the snapshot with an Arrow local relation of the keys, and
+        the payload is the classic inline {file: [keys]} JSON map.
+        Past it the targeting result is materialized once and checked
+        DISTRIBUTED (the driver sees per-file COUNTS only, no `isin`
+        literal enters a plan), and the keys go to a `_dv/` SIDECAR
+        parquet (file, key) whose entry holds per-file counts: a
+        10⁶-key delta costs O(1) driver memory and log-entry bytes.
 
         Returns (dv_payload, files_counts, keys_df, n_matched).
         """
@@ -2115,51 +2161,77 @@ class TxLogTable:
                 f"{verb}: key values must be int or str, got "
                 f"{ktype.simpleString()}"
             )
-        matched = matched.localCheckpoint()  # one targeting scan, reused
-        files_counts = {
-            r["__dv_file"]: r["n"]
-            for r in matched.groupBy("__dv_file")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+        head = matched.limit(inline_max + 1).toArrow()
+        inline = head.num_rows <= inline_max
+        if inline:
+            keys = head.column("__dv_key").to_pylist()
+            per_file: dict[str, list] = {}
+            for f, k in zip(head.column("__dv_file").to_pylist(), keys):
+                per_file.setdefault(f, []).append(k)
+            files_counts = {f: len(ks) for f, ks in per_file.items()}
+        else:
+            matched = matched.localCheckpoint()  # one targeting scan, reused
+            files_counts = {
+                r["__dv_file"]: r["n"]
+                for r in matched.groupBy("__dv_file")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            }
         n_matched = sum(files_counts.values())
         if n_matched == 0:
             raise ValueError(f"{verb}: predicate matched no rows")
-        keys_df = matched.select("__dv_key")
-        # struct() counts a NULL key as one value, as distinct() does
-        n_keys = keys_df.agg(F.count_distinct(F.struct("__dv_key"))).first()[0]
+        if inline:
+            keys_df = self._local_df(
+                spark, T.StructType([T.StructField("__dv_key", ktype)]), [keys]
+            )
+            n_keys = len(set(keys))
+        else:
+            keys_df = matched.select("__dv_key")
+            # struct() counts a NULL key as one value, as distinct() does
+            n_keys = keys_df.agg(
+                F.count_distinct(F.struct("__dv_key"))
+            ).first()[0]
         if n_keys != n_matched:
             raise ValueError(
                 f"{verb}: {key_col!r} is not unique among matched "
                 "rows — DV anti-join semantics need a unique key"
             )
-        n_with_key = (
-            snap.select(F.col(key_col).alias("__dv_key"))
-            .join(
+        if table_wide:
+            live = (
+                self._read_files(
+                    spark, sorted(st.active), None,
+                    dv_override=(self._dvs_for_keys(st.dvs, keys), st.dv_side),
+                )
+                if inline
+                else snap
+            )
+            hits = live.select(F.col(key_col).alias("__dv_key")).join(
                 keys_df
                 if n_matched > self.DV_BROADCAST_MAX
                 else F.broadcast(keys_df),
                 "__dv_key",
                 "left_semi",
             )
-            .count()
-        )
-        if n_with_key != n_matched:
-            raise ValueError(
-                f"{verb}: {n_with_key} rows share the {n_matched} "
-                f"matched {key_col!r} values — key must be unique "
-                "table-wide"
-            )
+            # inline, a bounded gather settles a passing check in one
+            # job; a failing one is counted exactly for the message
+            n_with_key = n_matched
+            if not inline or (
+                hits.limit(n_matched + 1).toArrow().num_rows != n_matched
+            ):
+                n_with_key = hits.count()
+            if n_with_key != n_matched:
+                raise ValueError(
+                    f"{verb}: {n_with_key} rows share the {n_matched} "
+                    f"matched {key_col!r} values — key must be unique "
+                    "table-wide"
+                )
         unknown = set(files_counts) - st.active
         if unknown:
             raise RuntimeError(
                 f"{verb}: matched rows map to unknown file(s) "
                 f"{sorted(unknown)[:3]}"
             )
-        if n_matched <= inline_max:
-            per_file: dict[str, list] = {}
-            for r in matched.collect():
-                per_file.setdefault(r["__dv_file"], []).append(r["__dv_key"])
+        if inline:
             payload = {
                 "key": key_phys,
                 "files": {f: sorted(ks) for f, ks in per_file.items()},
@@ -2200,21 +2272,25 @@ class TxLogTable:
         rows; vacuum never touches DV'd files (they are still active).
 
         Scale: the targeting pass is one predicate scan (file-pruned
-        by zone maps when stats cover the predicate columns), finished
-        DISTRIBUTED — no `.collect()` of matched rows, no `isin`
-        literal; the driver sees per-file COUNTS only. ≤ `inline_max`
-        matched keys land inline in the JSON entry (the trickle
-        regime); above it the keys go to a `_dv/` sidecar parquet and
-        the entry holds counts — bulk deltas cost O(1) driver memory
-        and log bytes (r10 verdict fix #1). Every subsequent read pays
-        one anti-join of the folded keys (_dv_join: hashed on the key,
-        broadcast under DV_BROADCAST_MAX, shuffle above) — the read
-        tax CoW avoids and MoR accepts to make deletes O(matched)
-        instead of O(files touched). Below the broadcast bound with
-        inline DVs the tax is a hash probe per scanned row: the pairs
-        ship as an Arrow local relation (no extra job) and the file
-        match runs only on key hits. Compaction settles the debt
-        (dv_debt() names when).
+        by zone maps when stats cover the predicate columns) gathered
+        under a bound of `inline_max + 1` rows in one Spark job. At or
+        under `inline_max` matched keys (the trickle regime) the
+        checks run on the driver and the table-wide probe broadcasts
+        the keys as an Arrow local relation, applying only the DVs
+        keyed among them, so a delete costs about three jobs and the
+        keys land inline in the JSON entry. Above it the targeting
+        result is checked DISTRIBUTED (per-file COUNTS on the driver,
+        no `isin` literal), the keys go to a `_dv/` sidecar parquet
+        and the entry holds counts — bulk deltas cost O(1) driver
+        memory and log bytes (r10 verdict fix #1). Every subsequent
+        read pays one anti-join of the folded keys (_dv_join: hashed
+        on the key, broadcast under DV_BROADCAST_MAX, shuffle above) —
+        the read tax CoW avoids and MoR accepts to make deletes
+        O(matched) instead of O(files touched). Below the broadcast
+        bound with inline DVs the tax is a hash probe per scanned row
+        plus one small broadcast job: the pairs ship as an Arrow local
+        relation and the file match runs only on key hits. Compaction
+        settles the debt (dv_debt() names when).
         """
         return self._mor_commit_dv(
             spark, predicate, key_col, inline_max, verb="delete_mor"
@@ -2239,7 +2315,8 @@ class TxLogTable:
             F.col(key_col).alias("__dv_key"),
         )
         payload, files_counts, keys_df, _ = self._mor_build_dv(
-            spark, snap, matched, key_col, key_phys, st, verb, inline_max
+            spark, snap, matched, key_col, key_phys, st, verb, inline_max,
+            table_wide=True,
         )
         version = self._next_version()
         for _ in range(256):
@@ -2310,8 +2387,9 @@ class TxLogTable:
         file per matched key.
 
         Contracts (enforced): `key_col` unique within `df` (a delta
-        with two versions of a key is ambiguous) and unique table-wide
-        among matched rows (delete_mor's anti-join contract); DV key
+        with two versions of a key is ambiguous) and unique among the
+        matched rows (delete_mor's anti-join contract; the matched
+        rows are every snapshot row keyed in the delta); DV key
         consistency with prior MoR commits; OCC — targeted files must
         still be active at publish (a concurrent rewrite fails the
         upsert loudly, exactly like delete_mor). Readers resolve new
@@ -2319,14 +2397,19 @@ class TxLogTable:
         time travel below the upsert shows the old rows; the txn
         ledger composes (this is an ordinary entry).
 
-        Bulk path (r10 verdict fix #1): targeting is a broadcast-
-        under-threshold equi-join of the delta keys against the
-        snapshot (never an `isin` literal), all contract checks run
-        distributed, and past `inline_max` (default DV_INLINE_MAX)
-        matched keys the DVs land in a `_dv/` sidecar parquet with
-        per-file COUNTS in the log entry — a 10⁶-key delta costs O(1)
-        driver memory and log bytes, the same cost law as the data
-        files themselves.
+        Trickle and bulk paths: one bounded collect of at most
+        `inline_max + 1` (default DV_INLINE_MAX) delta keys decides
+        the regime. A delta within the bound is checked on the driver,
+        and its keys target the snapshot as a broadcast Arrow local
+        relation, so the upsert runs about four Spark jobs: the key
+        collect, the broadcast, the bounded targeting collect of
+        _mor_build_dv and the delta write. A bulk delta (r10 verdict
+        fix #1) is materialized once and checked distributed, and
+        targeting is a broadcast-under-threshold equi-join (never an
+        `isin` literal). Past `inline_max` matched keys the DVs land
+        in a `_dv/` sidecar parquet with per-file COUNTS in the log
+        entry — a 10⁶-key delta costs O(1) driver memory and log
+        bytes, the same cost law as the data files themselves.
         """
         base_version = self._next_version() - 1
         st = self._fold_state()
@@ -2338,13 +2421,21 @@ class TxLogTable:
                 f"upsert_mor: table already carries DVs keyed on "
                 f"{st.dv_key!r}; cannot mix with {key_col!r}"
             )
-        # delta-side uniqueness, checked DISTRIBUTED (the delta may be
-        # bulk — never .collect() its keys to the driver)
+        if inline_max is None:
+            inline_max = self.DV_INLINE_MAX
+        # delta-side uniqueness: a delta of at most inline_max keys is
+        # checked on the driver from one bounded collect; a bulk delta
+        # is checked DISTRIBUTED (never .collect() all its keys)
         delta_keys = df.select(F.col(key_col).alias("__dv_key"))
-        delta_keys = delta_keys.localCheckpoint()
-        n_delta, n_distinct = delta_keys.agg(
-            F.count(F.lit(1)), F.count_distinct(F.struct("__dv_key"))
-        ).first()
+        head = [r[0] for r in delta_keys.limit(inline_max + 1).collect()]
+        inline = len(head) <= inline_max
+        if inline:
+            n_delta, n_distinct = len(head), len(set(head))
+        else:
+            delta_keys = delta_keys.localCheckpoint()
+            n_delta, n_distinct = delta_keys.agg(
+                F.count(F.lit(1)), F.count_distinct(F.struct("__dv_key"))
+            ).first()
         if n_distinct != n_delta:
             raise ValueError(
                 f"upsert_mor: {key_col!r} is not unique in the delta — "
@@ -2352,25 +2443,34 @@ class TxLogTable:
             )
         # targeting: which CURRENT rows are being replaced, per file —
         # a broadcast-under-threshold equi-join of the delta keys
-        # against the snapshot (never an `isin` literal in the plan)
-        snap = self._read_files(spark, sorted(st.active), None, with_file=True)
-        matched = (
-            snap.join(
-                delta_keys
-                if n_delta > self.DV_BROADCAST_MAX
-                else F.broadcast(delta_keys),
-                snap[key_col] == delta_keys["__dv_key"],
-                "inner",
+        # against the snapshot (never an `isin` literal in the plan).
+        # An inline delta's keys ship as an Arrow local relation, and
+        # the snapshot applies only the DVs keyed among them.
+        dv_override = None
+        if inline:
+            ktype = delta_keys.schema["__dv_key"].dataType
+            delta_keys = self._local_df(
+                spark, T.StructType([T.StructField("__dv_key", ktype)]), [head]
             )
-            .select(
-                self._norm_file_expr().alias("__dv_file"),
-                F.col("__dv_key"),
-            )
+            dv_override = (self._dvs_for_keys(st.dvs, head), st.dv_side)
+        snap = self._read_files(
+            spark, sorted(st.active), None, with_file=True,
+            dv_override=dv_override,
+        )
+        matched = snap.join(
+            delta_keys
+            if n_delta > self.DV_BROADCAST_MAX
+            else F.broadcast(delta_keys),
+            snap[key_col] == delta_keys["__dv_key"],
+            "inner",
+        ).select(
+            self._norm_file_expr().alias("__dv_file"),
+            snap[key_col].alias("__dv_key"),
         )
         try:
             payload, files_counts, _, n_matched = self._mor_build_dv(
                 spark, snap, matched, key_col, key_phys, st,
-                "upsert_mor", inline_max,
+                "upsert_mor", inline_max, table_wide=False,
             )
         except ValueError as err:
             # a delta whose keys are ALL new inserts matches nothing —
@@ -2785,11 +2885,7 @@ class TxLogTable:
         """WAP step 2: the audit surface — read exactly the staged
         files (quality gates run HERE, against bytes that are already
         final, before anything becomes visible)."""
-        return self._to_logical(
-            spark.read.parquet(
-                *[os.path.join(self.path, f) for f in files]
-            )
-        )
+        return self._to_logical(self._scan(spark, files))
 
     def publish_staged(
         self, files: list[str], stats_cols: list[str] | None = None

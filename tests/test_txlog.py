@@ -2651,3 +2651,217 @@ def test_fsck_ttl_and_sidecar_classes(spark, tmp_path):
     assert "_dv/deadbeef.parquet" in classes.get("sidecar_orphan", [])
     assert classes.get("sidecar_live"), "MoR sidecar must be live"
     assert t.read_snapshot(spark).count() == 1
+
+
+def _jobs_of(spark, fn):
+    """Run `fn` in a fresh Spark job group; return (its result, the
+    number of Spark jobs it started). The listener bus is drained so
+    the status tracker holds every job the call submitted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"txlog-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_verbs_and_snapshot_builds_run_few_spark_jobs(spark, tmp_path):
+    """Job-count tripwire for the lakehouse verbs on a 3-file table
+    with stats and an inline DV. Building a snapshot read takes its
+    schema from the parquet footers, so it starts no job. A trickle
+    delete_mor runs the bounded targeting collect, the key broadcast
+    and the bounded table-wide probe (its targeting scan needs no DV
+    broadcast here: Catalyst pushes the key predicate onto the DV
+    relation and finds it empty). An upsert_mor of a local delta
+    collects its keys without a job and runs the key broadcast, the
+    targeting collect and the delta write; the table's DV is keyed
+    outside the delta, so its scan carries no DV join."""
+    from pyspark.sql import types as T
+
+    t = TxLogTable(str(tmp_path / "tbl"))
+    t.commit(
+        spark.createDataFrame(
+            [(i, f"r{i}") for i in range(30)], "id long, v string"
+        ).repartition(3),
+        stats_cols=["id"],
+    )
+    assert len(t.active_files()) == 3
+    t.delete_mor(spark, F.col("id") == 1, "id")
+    assert t._fold_state().dvs
+
+    snap, n = _jobs_of(spark, lambda: t.read_snapshot(spark))
+    assert n == 0, f"read_snapshot build started {n} job(s)"
+    assert snap.count() == 29
+
+    _, n = _jobs_of(
+        spark, lambda: t.delete_mor(spark, F.col("id").isin(4, 17), "id")
+    )
+    assert n <= 3, f"delete_mor started {n} jobs"
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    delta = TxLogTable._local_df(spark, schema, [[5, 40], ["NEW5", "INS40"]])
+    _, n = _jobs_of(spark, lambda: t.upsert_mor(spark, delta, "id"))
+    assert n <= 3, f"upsert_mor started {n} jobs"
+    rows = {r["id"]: r["v"] for r in t.read_snapshot(spark).collect()}
+    assert len(rows) == 28 and rows[5] == "NEW5" and rows[40] == "INS40"
+    assert not {1, 4, 17} & set(rows)
+
+
+def test_mor_contract_errors_identical_on_inline_and_bulk_paths(
+    spark, tmp_path
+):
+    """Every MoR contract error is raised with the same message and in
+    the same order whether the checks run on the bounded driver-side
+    collect (inline_max=None) or distributed (inline_max=0)."""
+    import re
+
+    import pytest
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    for regime, im in (("inline", None), ("bulk", 0)):
+        t = TxLogTable(str(tmp_path / regime))
+        t.commit(
+            spark.createDataFrame(
+                [(1, "a"), (1, "b"), (1, "c"), (2, "d"), (3, "e")],
+                "id long, v string",
+            ).repartition(2)
+        )
+
+        def raises(msg, call):
+            with pytest.raises(ValueError, match=f"^{re.escape(msg)}$"):
+                call()
+
+        def delete(pred):
+            return lambda: t.delete_mor(spark, pred, "id", inline_max=im)
+
+        def upsert(rows):
+            # Arrow-built: no Python worker, so the test stays cheap
+            cols = [list(c) for c in zip(*rows)]
+            delta = TxLogTable._local_df(spark, schema, cols)
+            return lambda: t.upsert_mor(spark, delta, "id", inline_max=im)
+
+        raises("delete_mor: predicate matched no rows", delete(F.col("id") > 9))
+        # duplicate matched keys win over the table-wide breach
+        dup = "'id' is not unique among matched rows — DV anti-join " \
+            "semantics need a unique key"
+        raises(f"delete_mor: {dup}", delete(F.col("id") <= 2))
+        # a matched key shared by unmatched rows: the exact count
+        raises(
+            "delete_mor: 3 rows share the 1 matched 'id' values — key "
+            "must be unique table-wide",
+            delete(F.col("v") == "a"),
+        )
+        ambiguous = "upsert_mor: 'id' is not unique in the delta — two " \
+            "versions of one key is ambiguous"
+        raises(ambiguous, upsert([(7, "x"), (7, "y")]))
+        raises(ambiguous, upsert([(None, "x"), (None, "y")]))
+        raises(f"upsert_mor: {dup}", upsert([(1, "z")]))
+        assert t.entries()[-1]["version"] == 0, "a failed verb committed"
+        # a NULL delta key is one distinct value: a blind insert
+        upsert([(2, "D"), (None, "N")])()
+        got = sorted(
+            (r["id"] if r["id"] is not None else -1, r["v"])
+            for r in t.read_snapshot(spark).collect()
+        )
+        assert got == [
+            (-1, "N"), (1, "a"), (1, "b"), (1, "c"), (2, "D"), (3, "e"),
+        ], regime
+        dv = t.entries()[-1]["dv"]
+        assert ("sidecar" in dv) == (regime == "bulk"), dv
+        raises(
+            "delete_mor: table already carries DVs keyed on 'id'; cannot "
+            "mix with 'v'",
+            lambda: t.delete_mor(spark, F.col("id") == 3, "v", inline_max=im),
+        )
+
+
+def test_footer_schema_reads_equal_inferred_reads(spark, tmp_path):
+    """Snapshot reads take each schema group's schema from the Spark
+    row-metadata key in its first file's footer. Across add_column,
+    rename_column, drop_column, a merge_schema append and a sidecar
+    DV, that schema equals what Spark infers, and a parquet file
+    written without the key (pyarrow) falls back to inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    t = TxLogTable(str(tmp_path / "tbl"))
+    t.commit(
+        spark.createDataFrame(
+            [(i, f"r{i}", i * 1.5) for i in range(20)],
+            "id long, v string, x double",
+        ).repartition(2),
+        stats_cols=["id"],
+    )
+    t.add_column("w", 7, "int")
+    t.commit(
+        spark.createDataFrame(
+            [(20, "r20", 0.5, None), (21, "r21", 1.5, 3)],
+            "id long, v string, x double, w int",
+        )
+    )
+    t.rename_column("v", "label")
+    t.drop_column("x")
+    t.commit(
+        spark.createDataFrame(
+            [(22, "r22", 1, "extra")], "id long, label string, w int, z string"
+        ),
+        merge_schema=True,
+    )
+    t.delete_mor(spark, F.col("id") < 5, "id", inline_max=2)  # sidecar
+    st = t._fold_state()
+    assert st.dv_side
+
+    groups: dict = {}
+    for f in sorted(st.active):
+        names = frozenset(pq.read_schema(os.path.join(t.path, f)).names)
+        groups.setdefault(names, []).append(f)
+    assert len(groups) == 3
+    for fs in groups.values():
+        paths = [os.path.join(t.path, f) for f in fs]
+        assert t._scan(spark, fs).schema == spark.read.parquet(*paths).schema
+    sidecar = os.path.join(t.path, next(iter(st.dv_side)))
+    pairs = t._dv_pairs_df(spark, {}, st.dv_side, T.LongType())
+    assert pairs.schema == spark.read.parquet(sidecar).schema
+
+    rows = {
+        r["id"]: (r["label"], r["w"], r["z"])
+        for r in t.read_snapshot(spark).collect()
+    }
+    assert sorted(rows) == list(range(5, 23))
+    assert rows[5] == ("r5", 7, None)
+    assert rows[20] == ("r20", None, None)
+    assert rows[22] == ("r22", 1, "extra")
+
+    # a file without Spark's footer key (physical names: `label` is
+    # stored as `v`) reads through inference
+    staged = os.path.join(t.path, "staged-arrow")
+    os.makedirs(staged)
+    pq.write_table(
+        pa.table({"id": pa.array([100, 101], pa.int64()),
+                  "v": ["p", "q"], "w": pa.array([1, 2], pa.int32()),
+                  "z": ["s", None]}),
+        os.path.join(staged, "part-0.parquet"),
+    )
+    rel = ["staged-arrow/part-0.parquet"]
+    assert t._scan(spark, rel).schema == spark.read.parquet(
+        os.path.join(t.path, rel[0])
+    ).schema
+    assert sorted(
+        (r["id"], r["label"]) for r in t.read_staged(spark, rel).collect()
+    ) == [(100, "p"), (101, "q")]
+    t.publish_staged(rel)
+    assert {r["id"] for r in t.read_snapshot(spark).collect()} == set(
+        range(5, 23)
+    ) | {100, 101}
