@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 def sql(spark, sf_dir: str, text: str) -> DataFrame:
@@ -546,39 +547,108 @@ def profile_drift(
     )
 
 
+def _sql_str(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _key_value(col: str, dtype: T.DataType) -> tuple[str, str]:
+    """Injective ``(vi bigint, vs string)`` encoding, as SQL, of one
+    column's values for the key census: equal values map to equal
+    pairs, distinct values to distinct pairs, and NULL to
+    ``(NULL, NULL)``. Integral, boolean, date and timestamp values go
+    to ``vi`` (a timestamp as epoch microseconds: its local-time
+    string repeats across a DST fall-back); strings to ``vs``; binary
+    as hex; floats as their string with -0.0 folded into 0.0, because
+    ``count(DISTINCT)`` counts them as one value; decimals (one scale
+    per column) and timestamp_ntz as their string."""
+    c = "`" + col.replace("`", "``") + "`"
+    none_i, none_s = "CAST(NULL AS BIGINT)", "CAST(NULL AS STRING)"
+    if isinstance(dtype, (T.IntegralType, T.BooleanType)):
+        return f"CAST({c} AS BIGINT)", none_s
+    if isinstance(dtype, T.DateType):
+        return f"CAST(unix_date({c}) AS BIGINT)", none_s
+    if isinstance(dtype, T.TimestampType):
+        return f"unix_micros({c})", none_s
+    if isinstance(dtype, T.StringType):
+        return none_i, c
+    if isinstance(dtype, T.BinaryType):
+        return none_i, f"hex({c})"
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return none_i, f"IF({c} = 0, '0.0', CAST({c} AS STRING))"
+    if isinstance(dtype, (T.DecimalType, T.TimestampNTZType)):
+        return none_i, f"CAST({c} AS STRING)"
+    raise TypeError(
+        f"candidate-key census audits atomic columns; got {dtype.simpleString()}"
+    )
+
+
+def _cell_array(cells: list[tuple[str, str, str, int]]) -> str:
+    """SQL ``inline(array(struct(...)))`` of (column_id, vi, vs, w)."""
+    return "inline(array({}))".format(
+        ", ".join(
+            f"struct({_sql_str(cid)} AS column_id, {vi} AS vi, {vs} AS vs, {w} AS w)"
+            for cid, vi, vs, w in cells
+        )
+    )
+
+
+def key_cells(df: DataFrame, cols: list[str], table: str | None = None) -> DataFrame:
+    """One ``(column_id, vi, vs, w=1)`` cell per row and audited column
+    of ``df``, from one scan (an explode of per-row cell arrays).
+    ``column_id`` is ``table.col`` when ``table`` is given, else
+    ``col``; the value pair is ``_key_value``'s encoding. The plan is
+    one SQL expression, so building it costs one analysis, not one
+    py4j call per Column operation."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    return df.selectExpr(
+        _cell_array(
+            [
+                (f"{table}.{c}" if table else c, *_key_value(c, types[c]), 1)
+                for c in cols
+            ]
+        )
+    )
+
+
+def key_census(cells: DataFrame, column_ids: list[str]) -> DataFrame:
+    """Candidate-key census over ``key_cells`` output (any union of
+    them): per column the exact row/distinct/null counts, the
+    uniqueness ratio (NULL for a column of an empty table) and the key
+    verdict (distinct = rows AND zero nulls). Two aggregations:
+    ``groupBy(column_id, vi, vs)`` collapses equal values, then
+    ``groupBy(column_id)`` counts the value groups. One weight-0 NULL
+    cell per audited column keeps a column of an empty table in the
+    result, with zero counts. Returns (column_id, n_rows, n_distinct,
+    n_null, uniqueness, is_candidate_key)."""
+    n = "sum(k)"
+    d = "count_if(vi IS NOT NULL OR vs IS NOT NULL)"
+    z = "sum(IF(vi IS NULL AND vs IS NULL, k, 0))"
+    none = ("CAST(NULL AS BIGINT)", "CAST(NULL AS STRING)")
+    empty = cells.sparkSession.range(0, 1, 1, 1).selectExpr(
+        _cell_array([(c, *none, 0) for c in column_ids])
+    )
+    return (
+        cells.unionByName(empty)
+        .groupBy("column_id", "vi", "vs")
+        .agg(F.sum("w").alias("k"))
+        .groupBy("column_id")
+        .agg(
+            F.expr(n).alias("n_rows"),
+            F.expr(d).alias("n_distinct"),
+            F.expr(z).alias("n_null"),
+            F.expr(f"try_divide({d}, CAST({n} AS DOUBLE))").alias("uniqueness"),
+            F.expr(f"{d} = {n} AND {z} = 0").alias("is_candidate_key"),
+        )
+    )
+
+
 def candidate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
     """Candidate-key discovery (DQ9) over one table: per audited
     column the exact distinct/null counts, uniqueness ratio, and the
-    key verdict (distinct = rows AND zero nulls). One agg computes
-    every column's counts in one scan (multi-distinct plans via one
-    Expand — the documented k× pre-combine cost; split the call or
-    use approx for very wide audits), then the 1-row wide result
-    explodes to per-column cells. Returns (column_id, n_rows,
+    key verdict (distinct = rows AND zero nulls), from one scan into
+    ``key_cells`` and one ``key_census``. Returns (column_id, n_rows,
     n_distinct, n_null, uniqueness, is_candidate_key)."""
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        aggs.append(F.count_distinct(F.col(c)).alias(f"__d_{c}"))
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"__z_{c}"))
-    wide = df.agg(*aggs)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column_id"),
-                F.col(f"__d_{c}").alias("d"),
-                F.col(f"__z_{c}").alias("z"),
-            )
-            for c in cols
-        ]
-    )
-    d, z, n = F.col("s.d"), F.col("s.z"), F.col("__n")
-    return wide.select("__n", F.explode(structs).alias("s")).select(
-        F.col("s.column_id").alias("column_id"),
-        n.alias("n_rows"),
-        d.alias("n_distinct"),
-        z.alias("n_null"),
-        (d / n.cast("double")).alias("uniqueness"),
-        ((d == n) & (z == F.lit(0))).alias("is_candidate_key"),
-    )
+    return key_census(key_cells(df, cols), cols)
 
 
 def reconciliation_report(

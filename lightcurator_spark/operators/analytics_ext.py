@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lightcurator_spark import api
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, EAGER_ITERATES, query
 from lightcurator_spark.registry import load_table, table_rowcount
 
 
@@ -298,6 +298,7 @@ def q23_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "g1_pagerank",
+    eager=EAGER_ITERATES,
     oracle=None,
     note="rows-only: iterative power method (fixpoint class, SURVEY §2 "
     "oracle exemption); property test compares against a NumPy power "
@@ -445,7 +446,11 @@ LIMIT 20
 """
 
 
-@query("g1b_pagerank_fixed3", oracle=_G1B_ORACLE)
+@query(
+    "g1b_pagerank_fixed3",
+    oracle=_G1B_ORACLE,
+    eager=EAGER_ITERATES,
+)
 def g1b_pagerank_fixed3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1b: PageRank with FIXED-POINT arithmetic — the hash-oracled
     twin of ``g1_pagerank`` (r4 VERDICT missing #4). Ranks live in
@@ -891,6 +896,7 @@ def semantic_cell_assignments(
 
 @query(
     "l20_semantic_dedup",
+    eager="fits an MLlib KMeans model, whose iterations run on the driver",
     oracle=None,
     note="rows-only: k-means-seeded cluster ids; property test replays "
     "the multi-probe drop rule brute-force in NumPy over the same "
@@ -2641,7 +2647,11 @@ FROM g CROSS JOIN tot
 """
 
 
-@query("a40_bayesian_shrinkage", oracle=_A40_ORACLE)
+@query(
+    "a40_bayesian_shrinkage",
+    oracle=_A40_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def a40_bayesian_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A40: per-segment mean shrunk toward the grand mean with K=50
     pseudo-observations — the Bayesian-average estimator (the IMDb
@@ -2739,7 +2749,11 @@ LIMIT 20
 )
 
 
-@query("g12_personalized_pagerank", oracle=_G12_ORACLE)
+@query(
+    "g12_personalized_pagerank",
+    oracle=_G12_ORACLE,
+    eager=EAGER_ITERATES,
+)
 def g12_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G12: personalized PageRank — G1b's damped power iteration with
     the teleport vector RESTRICTED to a seed set (customers with

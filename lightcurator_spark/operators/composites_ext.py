@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, query
 from lightcurator_spark.registry import load_table
 
 
@@ -899,7 +899,11 @@ FROM scored GROUP BY decile
 """
 
 
-@query("q31b_pareto_boundary_scored", oracle=_Q31B_ORACLE)
+@query(
+    "q31b_pareto_boundary_scored",
+    oracle=_Q31B_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def q31b_pareto_boundary_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q31b: revenue Pareto by QUANTILE-BOUNDARY scoring — the 100 TB
     plan for Q31 (r8 verdict item 1: Q31's ntile is an unpartitioned
@@ -994,7 +998,11 @@ FROM scored GROUP BY 1
 """
 
 
-@query("q32b_rfm_boundary_scored", oracle=_Q32B_ORACLE)
+@query(
+    "q32b_rfm_boundary_scored",
+    oracle=_Q32B_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def q32b_rfm_boundary_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q32b: RFM segmentation by QUANTILE-BOUNDARY scoring — the 100 TB
     plan for Q32 (r8 verdict item 1): Q32 runs THREE unpartitioned

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, EAGER_ITERATES, query
 from lightcurator_spark.operators.theta_joins import banded_theta_join
 from lightcurator_spark.registry import load_table
 
@@ -611,6 +611,7 @@ def d8_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "a9b_sigma_clip_converged",
+    eager=EAGER_ITERATES,
     oracle=None,
     note="rows-only: iterative fixpoint (driver-side loop), the class of "
     "algorithm SURVEY's oracle contract exempts; property test checks "
@@ -1585,7 +1586,11 @@ WHERE n_even >= 3 AND n_odd >= 3
 """
 
 
-@query("d25_odd_even_depth", oracle=_D25_ORACLE)
+@query(
+    "d25_odd_even_depth",
+    oracle=_D25_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def d25_odd_even_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D25: odd/even transit-depth vetting — the classic follow-up to
     a BLS detection (D21): fold at the candidate period (the pinned

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_BUCKETED, EAGER_ITERATES, query
 from lightcurator_spark.registry import load_table
 
 
@@ -465,6 +465,7 @@ FROM reach GROUP BY v
 
 @query(
     "l9_dup_clusters",
+    eager=EAGER_ITERATES,
     oracle=_L9_ORACLE,
 )
 def l9_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,7 +590,11 @@ _L21B_ORACLE = _L21_ORACLE  # identical semantics — the Bloom stage is a
 # lossless pre-filter (false positives re-checked, negatives exact)
 
 
-@query("l21b_bloom_incremental_dedup", oracle=_L21B_ORACLE)
+@query(
+    "l21b_bloom_incremental_dedup",
+    oracle=_L21B_ORACLE,
+    eager="collects the per-word bloom masks to the driver",
+)
 def l21b_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L21b: the Bloom-filter semi-join l21's docstring promises for
     big-reference scale, made real. The reference fingerprint set is
@@ -763,6 +768,7 @@ def l22_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l9b_cc_large_small_star",
+    eager=EAGER_ITERATES,
     oracle=_L9_ORACLE,
 )
 def l9b_cc_large_small_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,7 +1234,11 @@ def _l31_postings_bucketed(spark: SparkSession, sf_dir: str) -> str:
     return tbl
 
 
-@query("l31b_sparse_cosine_bucketed", oracle=_L31_ORACLE)
+@query(
+    "l31b_sparse_cosine_bucketed",
+    oracle=_L31_ORACLE,
+    eager=EAGER_BUCKETED,
+)
 def l31b_sparse_cosine_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L31b: L31's inverted-index cosine self-join over BUCKETED
     postings — same semantics, same oracle, the cluster-scale physical
@@ -1521,7 +1531,11 @@ FROM c GROUP BY 1
 """
 
 
-@query("l42_cdc_incremental_dedup", oracle=_L42_ORACLE)
+@query(
+    "l42_cdc_incremental_dedup",
+    oracle=_L42_ORACLE,
+    eager="commits documents to a demo TxLogTable and checks the incremental index",
+)
 def l42_cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L42: dedup-index maintenance driven by the txlog CHANGE FEED —
     the composition the lakehouse tier exists for: the curated
@@ -1655,7 +1669,11 @@ FROM b GROUP BY 1
 """
 
 
-@query("l48_cluster_safe_split", oracle=_L48_ORACLE)
+@query(
+    "l48_cluster_safe_split",
+    oracle=_L48_ORACLE,
+    eager="builds l9's clusters, which iterate on the driver",
+)
 def l48_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L48: dedup-safe train/val/test assignment — the split step a
     near-dup pipeline must END with: hashing doc_id scatters the

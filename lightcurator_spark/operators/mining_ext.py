@@ -19,6 +19,7 @@ are the binding spec.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lightcurator_spark import api
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, query
 from lightcurator_spark.registry import load_table
 
 
@@ -543,7 +544,11 @@ FROM seg CROSS JOIN g
 """
 
 
-@query("dq7_freshness_audit", oracle=_DQ7_ORACLE)
+@query(
+    "dq7_freshness_audit",
+    oracle=_DQ7_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def dq7_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DQ7: data-freshness audit — per (event_type, user-bucket)
     segment, last-seen event time, lag behind the stream's global
@@ -1323,57 +1328,28 @@ def dq9_candidate_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     modes are separately visible (DQ6's three-valued-logic
     discipline).
 
-    Scale: one agg per audited table computing all that table's
-    column verdicts in one pass (grouped by nothing — partial/final
-    count-distinct per column; Spark plans multi-distinct via Expand,
-    k× row replication BEFORE the combine, the documented cost of
-    exact multi-column distinct in one scan — acceptable because k =
-    columns-per-table ≤ 4 here; at wider audits split per column or
-    swap to approx_count_distinct). The union is k small cell rows.
+    Scale: one census over the union of every audited table's
+    ``(column_id, value)`` cells (``api.platform.key_cells``: one scan
+    per table, an explode to one cell per audited column, the value a
+    typed ``(bigint, string)`` pair), then ``api.platform.key_census``:
+    ``groupBy(column_id, value)`` collapses equal values and
+    ``groupBy(column_id)`` counts them. Two
+    shuffles for the whole audit, however many tables or columns it
+    covers, and no multi-distinct Expand per table. A column of an
+    empty table still reports one row (zero counts, NULL uniqueness).
     """
     per_table: dict[str, list[str]] = {}
     for t, c in _DQ9_COLS:
         per_table.setdefault(t, []).append(c)
-    parts = []
-    for t, cols in per_table.items():
-        df = load_table(spark, sf_dir, t)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in cols:
-            aggs.append(F.count_distinct(F.col(c)).alias(f"__d_{c}"))
-            aggs.append(
-                F.count(F.when(F.col(c).isNull(), 1)).alias(f"__z_{c}")
-            )
-        wide = df.agg(*aggs)
-        # explode the 1-row wide agg into per-column rows INSIDE one
-        # plan branch — the table is scanned once per table, not once
-        # per audited column
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(f"{t}.{c}").alias("column_id"),
-                    F.col(f"__d_{c}").alias("d"),
-                    F.col(f"__z_{c}").alias("z"),
-                )
-                for c in cols
-            ]
-        )
-        d = F.col("s.d")
-        z = F.col("s.z")
-        n = F.col("__n")
-        parts.append(
-            wide.select("__n", F.explode(structs).alias("s")).select(
-                F.col("s.column_id").alias("column_id"),
-                n.alias("n_rows"),
-                d.alias("n_distinct"),
-                z.alias("n_null"),
-                R4(d / n.cast("double")).alias("uniqueness"),
-                ((d == n) & (z == F.lit(0))).alias("is_candidate_key"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+    cells = [
+        api.platform.key_cells(load_table(spark, sf_dir, t), cols, t)
+        for t, cols in per_table.items()
+    ]
+    out = api.platform.key_census(
+        functools.reduce(DataFrame.unionAll, cells),
+        [f"{t}.{c}" for t, c in _DQ9_COLS],
+    )
+    return out.withColumn("uniqueness", R4(F.col("uniqueness")))
 
 
 # --------------------------------------------------------------------
@@ -2389,6 +2365,7 @@ def dq12_fingerprint(df: DataFrame, segment: str = "event_type") -> DataFrame:
 
 @query(
     "dq12_table_fingerprint",
+    eager="fingerprints demo TxLogTables and their clone, and checks them with collects",
     oracle=_DQ12_ORACLE,
     note="the hashed result is the per-segment order-invariant table "
     "fingerprint (NONLINEAR row hashes — square of the mixed integer "
@@ -2572,6 +2549,7 @@ FROM hashed GROUP BY event_type
 
 @query(
     "dq13_incremental_fingerprint",
+    eager="commits to a demo TxLogTable and collects each version's fingerprint",
     oracle=_DQ13_ORACLE,
     note="the hashed result is the per-segment DQ12 fingerprint of a "
     "txlog table's FINAL state, maintained INCREMENTALLY through the "

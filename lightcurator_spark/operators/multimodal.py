@@ -773,6 +773,7 @@ def _phash_band_pairs(hashed: DataFrame, max_hamming: int = 6) -> DataFrame:
 
 @query(
     "l36b_image_phash_binaryfile",
+    eager="writes its image fixture files from a mapInPandas job",
     oracle=None,
     note="rows-only: the l36 pipeline fed END TO END from the s4 "
     "binaryFile source — real .bmp files materialized executor-side, "

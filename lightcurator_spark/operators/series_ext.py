@@ -38,7 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import (
+    EAGER_BUCKETED,
+    EAGER_CHECKPOINT,
+    EAGER_ITERATES,
+    query,
+)
 from lightcurator_spark.registry import load_table
 
 
@@ -1180,7 +1185,11 @@ FROM deg LEFT JOIN tri ON tri.node = deg.node
 """
 
 
-@query("g10_clustering_coefficient", oracle=_G10_ORACLE)
+@query(
+    "g10_clustering_coefficient",
+    oracle=_G10_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def g10_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G10: local clustering coefficient per node — 2·T(u) /
     (deg(u)·(deg(u)−1)), the per-node DENSITY normalization of G3's
@@ -1634,7 +1643,11 @@ HAVING count(*) >= 2
 """
 
 
-@query("l28_neardup_canonicalize", oracle=_L28_ORACLE)
+@query(
+    "l28_neardup_canonicalize",
+    oracle=_L28_ORACLE,
+    eager=EAGER_ITERATES,
+)
 def l28_neardup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L28: the near-dup pipeline end-to-end, fully value-hash
     oracled — L25's exact prefix-filtered τ=0.9 pair join feeds
@@ -2294,7 +2307,11 @@ def _proc_edges_bucketed(spark: SparkSession, sf_dir: str) -> str:
     return tbl
 
 
-@query("g5b_label_propagation_bucketed", oracle=_G5_ORACLE)
+@query(
+    "g5b_label_propagation_bucketed",
+    oracle=_G5_ORACLE,
+    eager=EAGER_BUCKETED,
+)
 def g5b_label_propagation_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2477,17 +2494,17 @@ def a30_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _g6_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G6's symmetrized distinct edge list (one lineitem scan, cached
-    across the peel rounds). Factored out so the plan tripwire can
-    build one round exactly as the operator does (the per-round plans
-    are hidden behind the r12 lineage cut in the full query)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    d = li.groupBy(
-        (F.col("l_partkey") * 2).alias("a"),
-        (F.col("l_suppkey") * 2 + 1).alias("b"),
-    ).agg(F.lit(1).alias("_one"))
+    across the peel rounds). Rows with a NULL endpoint are dropped
+    here: the oracle's equi-joins never match them (G6's NULL rule)."""
+    d = (
+        load_table(spark, sf_dir, "lineitem")
+        .where("l_partkey IS NOT NULL AND l_suppkey IS NOT NULL")
+        .selectExpr("l_partkey * 2 AS a", "l_suppkey * 2 + 1 AS b")
+        .distinct()
+    )
     return (
-        d.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(d.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        d.selectExpr("a AS src", "b AS dst")
+        .unionByName(d.selectExpr("b AS src", "a AS dst"))
         .cache()
     )
 
@@ -2537,39 +2554,44 @@ def g6_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparser graphs), so r3's output IS the true 2-core here while the
     fixed bound keeps the plan finite at any scale.
 
+    Peel form: round k is ONE semi-join and one count,
+    ``sym ⋉_dst S(k-1)`` grouped by ``src`` with ``deg >= 2``. The
+    oracle also restricts ``src`` to the survivors; that restriction
+    is implied. A node dropped in round j had fewer than 2 neighbours
+    in S(j-1), and survivor sets only shrink (S(k-1) ⊆ S(j-1)), so it
+    can never again reach ``deg >= 2`` against a later survivor set.
+    Round 1 needs no join at all: ``sym`` is symmetric, so every
+    ``dst`` is some ``src`` and S0 (all nodes) matches every edge.
+    NULL rule: the oracle's equi-joins never match a NULL node, so an
+    edge with a NULL endpoint never counts and a NULL node never
+    survives; ``_g6_sym_edges`` drops those edges before round 1,
+    where no join would otherwise discard them.
+
     Scale: one lineitem scan builds the distinct edge list (partial
-    agg), cached across rounds; each round is two hash semi-joins of
-    the edge list against the shrinking survivor set plus a count
-    agg — the Pregel degree-peel shape, never all-pairs; survivor
-    tables only shrink, and the fixed 3 rounds bound total work at
-    3× the edge list regardless of corpus size.
+    agg), cached across rounds. Each round references the previous
+    survivors once, so the three rounds nest into one linear plan of
+    two hash semi-joins and three count aggs: no lineage cut, and
+    the build starts no Spark job. At the 16x replica under the
+    cluster profile (AQE on, 4 cores), the best of 5 warm fresh-plan
+    calls took 29.7 s. The earlier form, two semi-joins per round and
+    a lazy ``localCheckpoint`` after each, took 53.7 s there.
     """
     sym = _g6_sym_edges(spark, sf_dir)
-    survivors = sym.select(F.col("src").alias("node")).distinct()
-    for _ in range(3):
-        survivors = (
-            sym.join(
-                survivors.select(F.col("node").alias("src")), "src", "left_semi"
-            )
-            .join(
-                survivors.select(F.col("node").alias("dst")), "dst", "left_semi"
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= 2)
-            # lineage cut (r12 suite probe): each round references the
-            # previous survivors TWICE (src+dst semi-joins), so without
-            # a cut the plan tree doubles per round and exchange reuse
-            # stops absorbing it at scale — measured 65x wall at 16x
-            # data, ~20x with the cut (g6b's bucketed flipped-join form
-            # measures 10.4x and is the shipping path at scale); the
-            # G1b/G9/L46 iterative device
-            .localCheckpoint(eager=False)
-        )
-    return survivors.select("node", "deg")
+
+    def peel(edges: DataFrame) -> DataFrame:
+        return edges.groupBy("src").agg(F.count("*").alias("deg")).where("deg >= 2")
+
+    survivors = peel(sym)
+    for _ in range(2):
+        survivors = peel(sym.join(survivors.selectExpr("src AS dst"), "dst", "left_semi"))
+    return survivors.selectExpr("src AS node", "deg")
 
 
-@query("g6b_kcore_peel_bucketed", oracle=_G6_ORACLE)
+@query(
+    "g6b_kcore_peel_bucketed",
+    oracle=_G6_ORACLE,
+    eager="writes the edge table it shares with g5b on the first build in a session",
+)
 def g6b_kcore_peel_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G6b: G6's 2-core peel over the SHARED dst-bucketed edge table
     (G5b's `_proc_edges_bucketed` — one amortized write serves both
@@ -2998,7 +3020,11 @@ GROUP BY src
 """
 
 
-@query("g9_harmonic_centrality", oracle=_G9_ORACLE)
+@query(
+    "g9_harmonic_centrality",
+    oracle=_G9_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def g9_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G9: harmonic centrality truncated at 4 hops — Σ 1/d(u,v) over
     every node reached within 4 BFS rounds, the influence-ranking
@@ -3137,7 +3163,11 @@ def _g9_edges_bucketed(spark: SparkSession, sf_dir: str) -> str:
     return tbl
 
 
-@query("g9b_harmonic_centrality_bucketed", oracle=_G9_ORACLE)
+@query(
+    "g9b_harmonic_centrality_bucketed",
+    oracle=_G9_ORACLE,
+    eager=EAGER_BUCKETED,
+)
 def g9b_harmonic_centrality_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3228,7 +3258,11 @@ WHERE p.n_shared_parts >= 2
 """
 
 
-@query("g11_cooccurrence_projection", oracle=_G11_ORACLE)
+@query(
+    "g11_cooccurrence_projection",
+    oracle=_G11_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def g11_cooccurrence_projection(
     spark: SparkSession, sf_dir: str, deg_cap: int = 64
 ) -> DataFrame:
@@ -3389,7 +3423,11 @@ CROSS JOIN tot t
 """
 
 
-@query("q33_association_rules", oracle=_Q33_ORACLE)
+@query(
+    "q33_association_rules",
+    oracle=_Q33_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def q33_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q33: directional association rules — Q26's pair lift completed
     into the classic (support, confidence, lift) triple, one rule per

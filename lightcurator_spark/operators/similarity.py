@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, query
 from lightcurator_spark.registry import load_table, table_rowcount
 
 
@@ -138,41 +138,60 @@ def f7_vector_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_CACHE: dict = {}
 
 
+class EmbeddingsNotVisibleError(FileNotFoundError):
+    """The embeddings parquet named by the driver is not on this
+    worker's filesystem. The exact similarity kernels read it
+    executor-side, so their executors must share the driver's
+    storage (or run in local mode)."""
+
+
+def _list_matrix(emb, n: int):
+    """(n, width) float64 matrix of a pyarrow list array of
+    fixed-width vectors. ``flatten()`` honours the array's offset and
+    slice; the raw ``values`` buffer does not. Ragged vectors take the
+    generic per-row path."""
+    import numpy as np
+
+    widths = np.diff(emb.offsets.to_numpy()) if hasattr(emb, "offsets") else None
+    if widths is not None and widths.size and (widths == widths[0]).all():
+        # reshape the flat Arrow values instead of materializing Python
+        # lists (to_pylist measured ~10x slower per task)
+        flat = emb.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+        return flat.reshape(n, int(widths[0]))
+    return np.asarray(emb.to_pylist(), dtype=np.float64)
+
+
 def _read_embeddings_numpy(sf_dir: str):
     """(ids, mat) of the full embeddings table, read EXECUTOR-SIDE with
-    pyarrow from the same parquet the query declares (r13, the judge's
-    item 5): the exact twins' contract is "corpus fits one broadcast",
-    but staging it through driver Python (`toPandas` + sc.broadcast)
-    put corpus + pickle copy in driver RSS and ran an eager Spark job
-    at plan-BUILD time. A per-worker parquet read has the same memory
-    contract executor-side, costs one local columnar read (the file is
-    on shared storage by the same assumption that makes the corpus
-    broadcastable), and the driver never touches a vector."""
+    pyarrow from the same parquet the query declares: the exact twins'
+    contract is "corpus fits one broadcast", but staging it through
+    driver Python (`toPandas` + sc.broadcast) put corpus + pickle copy
+    in driver RSS and ran an eager Spark job at plan-BUILD time. A
+    per-worker parquet read has the same memory contract
+    executor-side, costs one local columnar read, and the driver never
+    touches a vector. It needs the file on storage every executor
+    sees; where it is not, ``EmbeddingsNotVisibleError`` says so."""
     import os
 
     import numpy as np
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/embeddings.parquet"
-    st = os.stat(path)
+    try:
+        st = os.stat(path)
+    except FileNotFoundError as e:
+        raise EmbeddingsNotVisibleError(
+            f"{path} is not visible from this worker; the exact "
+            "similarity kernels read it executor-side, so every executor "
+            "must share the driver's filesystem"
+        ) from e
     key = (os.getpid(), path, st.st_mtime_ns, st.st_size)
     hit = _EMB_CACHE.get(key)
     if hit is not None:
         return hit
     tab = pq.read_table(path, columns=["vec_id", "embedding"])
     ids = tab.column("vec_id").to_numpy().astype(np.int64)
-    emb = tab.column("embedding").combine_chunks()
-    # vectors are fixed-width: reshape the flat Arrow value buffer
-    # instead of materializing Python lists (to_pylist measured ~10x
-    # slower per task)
-    widths = (
-        np.diff(emb.offsets.to_numpy()) if hasattr(emb, "offsets") else None
-    )
-    if widths is not None and widths.size and (widths == widths[0]).all():
-        flat = emb.values.to_numpy(zero_copy_only=False).astype(np.float64)
-        mat = flat.reshape(ids.size, int(widths[0]))
-    else:  # ragged/fixed-size corpus: the generic path
-        mat = np.asarray(emb.to_pylist(), dtype=np.float64)
+    mat = _list_matrix(tab.column("embedding").combine_chunks(), ids.size)
     _EMB_CACHE.clear()  # one entry: drop any other sf_dir/pid leftovers
     _EMB_CACHE[key] = (ids, mat)
     return ids, mat
@@ -509,6 +528,7 @@ def l5_similarity_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l4c_knn_vectorized",
+    eager="collects the capped query side for the GEMM closure",
     oracle=None,
     note="rows-only: BLAS reduction order differs from the sequential "
     "fold at the last ulp; tests assert neighbor-set identity with l4",
@@ -582,6 +602,7 @@ def l4c_knn_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l4d_knn_ivf",
+    eager="fits an MLlib KMeans coarse quantizer and collects the query side",
     oracle=None,
     note="rows-only: k-means-seeded IVF; tests assert exact scoring of "
     "returned pairs + recall vs l4_knn_bruteforce",
@@ -648,6 +669,7 @@ def l4d_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l4f_knn_ivf_two_level",
+    eager="collects a seeded sample for the IVF centroids",
     oracle=None,
     note="rows-only: sampled-Lloyd centers + two-level assignment; tests "
     "assert exact scoring of returned pairs + recall vs l4_knn_bruteforce",
@@ -941,6 +963,7 @@ def _nsw_beam(
 
 @query(
     "l4g_knn_nsw",
+    eager="collects a seeded centroid sample and plans lazy localCheckpoints",
     oracle=None,
     note="rows-only: fixed-degree navigable graph over IVF cells + "
     "fixed-round greedy beam search; tests assert exact scoring of "
@@ -963,6 +986,7 @@ def l4g_knn_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l4h_nsw_incremental_insert",
+    eager="collects a seeded centroid sample and plans lazy localCheckpoints",
     oracle=None,
     note="rows-only: NSW index MAINTENANCE — a 14% corpus delta is "
     "inserted into the existing graph by beam-SEARCHING each new "
@@ -1080,6 +1104,7 @@ def l4h_nsw_incremental_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l4i_nsw_delete",
+    eager="collects a seeded centroid sample and plans lazy localCheckpoints",
     oracle=None,
     note="rows-only: tombstone DELETE from the NSW graph index — 10% "
     "of the corpus (vec_id % 10 == 1) is retracted; searches exclude "
@@ -1483,6 +1508,7 @@ def l18_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l4e_knn_pq",
+    eager="collects a training sample for the PQ codebooks and the query side",
     oracle=None,
     note="rows-only: PQ codebooks are trained with a deterministic "
     "NumPy k-means (seedless first-K init over vec_id order) and the "
@@ -1749,6 +1775,7 @@ def l35_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l35b_pca_project",
+    eager="collects the covariance for a driver-side eigendecomposition",
     oracle=None,
     note="rows-only: eigendecomposition happens driver-side on the "
     "64×64 covariance (bounded by construction) and eigenvector sign "
@@ -1881,7 +1908,11 @@ def _ml1_assign(e: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame
     )
 
 
-@query("ml1_kmeans_assign", oracle=_ML1_ORACLE)
+@query(
+    "ml1_kmeans_assign",
+    oracle=_ML1_ORACLE,
+    eager="collects the seed and round-2 centroids to the driver",
+)
 def ml1_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML1: k-means clustering as a first-class hash-checked operator —
     the primitive L20 (semantic dedup) and L4d (IVF) consume from
@@ -2029,6 +2060,7 @@ def ml2_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml2b_ridge_predict",
+    eager="collects ml2's normal-equation sums to solve the ridge system on the driver",
     oracle=None,
     note="rows-only: the D×D ridge solve happens driver-side on the "
     "exact integer moments (bounded by construction, the l35b "
@@ -2310,6 +2342,7 @@ def ml5_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml5b_knn_classifier_ivf",
+    eager="collects a seeded sample for the IVF centroids",
     oracle=None,
     note="rows-only: k-means-seeded IVF candidates; tests assert per-vector "
     "prediction agreement with the exact ml5 ≥ 0.75 (measured 0.88 at "
@@ -2726,7 +2759,11 @@ FROM w{_ML9_STEPS}
 )
 
 
-@query("ml9_logistic_gd", oracle=_ML9_ORACLE)
+@query(
+    "ml9_logistic_gd",
+    oracle=_ML9_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def ml9_logistic_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML9: logistic regression (purchase ∼ hour + day-of-week) by 3
     full-batch gradient-descent steps — the iterative-optimizer verb
@@ -2863,7 +2900,11 @@ _ML10_ORACLE = _ML10_ORACLE.format(
 )
 
 
-@query("ml10_silhouette", oracle=_ML10_ORACLE)
+@query(
+    "ml10_silhouette",
+    oracle=_ML10_ORACLE,
+    eager="collects ml1's seed and round-2 centroids to the driver",
+)
 def ml10_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ML10: simplified (centroid-based) silhouette per cluster — the
     QUALITY readout for ML1's clustering the ML tier was missing: for
@@ -3063,7 +3104,11 @@ FROM r WHERE rn <= 10
 """
 
 
-@query("p11_cluster_stratified_sample", oracle=_P11_ORACLE)
+@query(
+    "p11_cluster_stratified_sample",
+    oracle=_P11_ORACLE,
+    eager="collects ml1's seed and round-2 centroids to the driver",
+)
 def p11_cluster_stratified_sample(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, query
 from lightcurator_spark.registry import load_table
 
 
@@ -1753,7 +1753,11 @@ FROM ranked r CROSS JOIN kmax
 """
 
 
-@query("a39_bh_fdr", oracle=_A39_ORACLE)
+@query(
+    "a39_bh_fdr",
+    oracle=_A39_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def a39_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A39: Benjamini–Hochberg FDR control over a BATTERY of per-object
     drift tests — the multiple-comparisons closer the inference family
@@ -2009,7 +2013,11 @@ FROM s WHERE n > 0
 """
 
 
-@query("a42_wilcoxon_signed_rank", oracle=_A42_ORACLE)
+@query(
+    "a42_wilcoxon_signed_rank",
+    oracle=_A42_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def a42_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A42: Wilcoxon signed-rank test — the PAIRED member of the
     nonparametric family (A26 MWU = two independent samples, A42 =
@@ -2933,6 +2941,7 @@ FROM arm_ CROSS JOIN mom
 
 @query(
     "a50_cuped_adjustment",
+    eager=EAGER_CHECKPOINT,
     oracle=_A50_ORACLE,
     note="the hashed result is the full CUPED readout — per-arm raw "
     "and covariate-adjusted means, the pooled theta, and the "

@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 
 from lightcurator_spark import api
 from lightcurator_spark.operators.dedup import gram_keys
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, query
 from lightcurator_spark.registry import load_table
 
 
@@ -1664,7 +1664,11 @@ FROM u CROSS JOIN tot
 """
 
 
-@query("l43_temperature_mixture", oracle=_L43_ORACLE)
+@query(
+    "l43_temperature_mixture",
+    oracle=_L43_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def l43_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L43: temperature-scaled source mixture — w_s ∝ n_tokens^0.7, the
     per-source share of a 100k-token budget, and the oversampling
@@ -1730,7 +1734,11 @@ FROM pre p LEFT JOIN post USING (source) CROSS JOIN tot
 """
 
 
-@query("l44_dedup_impact_report", oracle=_L44_ORACLE)
+@query(
+    "l44_dedup_impact_report",
+    oracle=_L44_ORACLE,
+    eager=EAGER_CHECKPOINT,
+)
 def l44_dedup_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L44: dedup impact report — what does L1's exact dedup DO to the
     corpus mix? Per source: docs/tokens before and after global
@@ -1933,7 +1941,11 @@ SELECT 3, (SELECT pair FROM b3), (SELECT n FROM b3),
 """
 
 
-@query("l46_bpe_merge_rounds", oracle=_L46_ORACLE)
+@query(
+    "l46_bpe_merge_rounds",
+    oracle=_L46_ORACLE,
+    eager="learns BPE merges on the driver, one collect per merge round",
+)
 def l46_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L46: byte-pair-encoding merge rounds — the TOKENIZER-TRAINING
     kernel, distributed: three unrolled BPE rounds over the corpus
@@ -2198,6 +2210,7 @@ def _bpe_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "l46b_bpe_apply",
+    eager="learns BPE merges on the driver, one collect per merge round",
     oracle=_L46B_ORACLE,
     note="the hashed result is the full per-document tokenization "
     "census under the LEARNED merges — training and application are "
@@ -2273,6 +2286,7 @@ FROM u CROSS JOIN tot
 
 @query(
     "l43b_bpe_temperature_mixture",
+    eager="learns BPE merges on the driver, one collect per merge round",
     oracle=_L43B_ORACLE,
     note="l43's temperature mixture re-based on REAL tokenizer counts "
     "— the l46b per-doc BPE census aggregated per source feeds the "

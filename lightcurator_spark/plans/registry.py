@@ -31,9 +31,22 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None = None  # DuckDB SQL; None → rows-only check
     note: str = ""
+    # why building this query starts Spark jobs; "" → the build starts
+    # none (tests/test_plans.py's build tripwire holds it to that)
+    eager: str = ""
 
 
 QUERIES: dict[str, QuerySpec] = {}
+
+# Shared ``eager`` reasons. A lazy ``localCheckpoint(eager=False)``
+# still plans its RDD when the DataFrame is built: under AQE that runs
+# every shuffle stage below it, and a broadcast below it runs always.
+EAGER_CHECKPOINT = "plans a lazy localCheckpoint, which runs the stages below it"
+EAGER_ITERATES = "iterates on the driver: an eager localCheckpoint and a count per round"
+EAGER_TXLOG = "writes and commits a demo TxLogTable, then reads it back"
+EAGER_FILES = "writes its demo files, then reads them back"
+EAGER_STREAM = "runs its stream to completion into a sink"
+EAGER_BUCKETED = "writes its bucketed table on the first build in a session"
 
 # Modules whose import registers queries (one per SURVEY §2 wave/family).
 _QUERY_MODULES = [
@@ -58,11 +71,17 @@ _QUERY_MODULES = [
 ]
 
 
-def query(name: str, oracle: str | None = None, note: str = "") -> Callable[[QueryFn], QueryFn]:
-    """Decorator registering a query spec under ``name``."""
+def query(
+    name: str, oracle: str | None = None, note: str = "", eager: str = ""
+) -> Callable[[QueryFn], QueryFn]:
+    """Decorator registering a query spec under ``name``. A query whose
+    build (``fn`` itself, before any action) starts Spark jobs says why
+    in ``eager``, e.g. ``eager="writes a TxLogTable"``."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = QuerySpec(name=name, fn=fn, oracle=oracle, note=note)
+        QUERIES[name] = QuerySpec(
+            name=name, fn=fn, oracle=oracle, note=note, eager=eager
+        )
         return fn
 
     return deco

@@ -27,7 +27,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_BUCKETED, EAGER_FILES, query
 from lightcurator_spark.registry import load_table
 
 from lightcurator_spark.scratch import SCRATCH_ROOT as _SCRATCH
@@ -165,6 +165,7 @@ def s4_binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s5_partitioned_sink",
+    eager=EAGER_FILES,
     oracle="""
     SELECT event_type, count(*) AS n,
            floor((sum(value)) * 10000 + 0.5) / 10000 AS sum_value
@@ -222,6 +223,7 @@ def d1_observation_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s7_bucketed_colocated_join",
+    eager=EAGER_BUCKETED,
     oracle="""
     SELECT c_mktsegment,
            count(*) AS n_orders,
@@ -325,7 +327,11 @@ _S9_ORACLE = "SELECT * FROM (VALUES " + ", ".join(
 ) + ") t(obs_id, name)"
 
 
-@query("s9_python_stream_source", oracle=_S9_ORACLE)
+@query(
+    "s9_python_stream_source",
+    oracle=_S9_ORACLE,
+    eager="runs its Python stream source into a memory sink and polls it",
+)
 def s9_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9: custom STREAMING source via the Spark 4 Python DataSource
     API (``SimpleDataSourceStreamReader``) — the extension point a live
@@ -408,6 +414,7 @@ def s9_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s10_orc_roundtrip",
+    eager=EAGER_FILES,
     oracle="""
     SELECT l_returnflag, l_linestatus, count(*) AS n,
            floor((sum(l_quantity)) * 10000 + 0.5) / 10000 AS sum_qty,
@@ -440,6 +447,7 @@ def s10_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s11_compact_small_files",
+    eager=EAGER_FILES,
     oracle="""
     SELECT event_type, count(*) AS n,
            floor((sum(value)) * 10000 + 0.5) / 10000 AS sum_value,
@@ -499,7 +507,11 @@ FROM z GROUP BY 1
 """
 
 
-@query("s12_zorder_layout", oracle=_S12_ORACLE)
+@query(
+    "s12_zorder_layout",
+    oracle=_S12_ORACLE,
+    eager=EAGER_FILES,
+)
 def s12_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S12: Z-order (Morton) clustering layout — the multi-dimensional
     data-skipping write S5's single-sort layout can't give: sorting by
@@ -553,6 +565,7 @@ def s12_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s13_schema_evolution",
+    eager=EAGER_FILES,
     oracle="""
     WITH merged AS (
       SELECT event_id, user_id, value, NULL AS event_type, 1 AS v
@@ -601,6 +614,7 @@ def s13_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s14_partition_gap_audit",
+    eager=EAGER_FILES,
     oracle="""
     WITH cal AS (
       SELECT unnest(generate_series(DATE '2024-01-01', DATE '2024-01-30',
@@ -661,6 +675,7 @@ def s14_partition_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s16_gzip_jsonl_roundtrip",
+    eager=EAGER_FILES,
     oracle="""
     SELECT lang, CAST(count(*) AS BIGINT) AS n,
            sum(n_chars) AS sum_chars,
@@ -698,6 +713,7 @@ def s16_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s17_partition_pruned_read",
+    eager=EAGER_FILES,
     oracle="""
     SELECT user_id, CAST(count(*) AS BIGINT) AS n,
            floor(sum(value) * 10000 + 0.5) / 10000 AS sum_value
@@ -840,6 +856,7 @@ def s18_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s19_dynamic_partition_overwrite",
+    eager=EAGER_FILES,
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
@@ -926,7 +943,11 @@ SELECT NULL, 'corrupt', 6, 4, 4516
 """
 
 
-@query("s27_corrupt_record_census", oracle=_S27_ORACLE)
+@query(
+    "s27_corrupt_record_census",
+    oracle=_S27_ORACLE,
+    eager=EAGER_FILES,
+)
 def s27_corrupt_record_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S27: corrupt-record CSV ingest census — what PERMISSIVE mode
     actually does with dirty text data, pinned. The nation table
@@ -1044,7 +1065,11 @@ SELECT NULL, 'corrupt', 5, 0, 2, 1804
 """
 
 
-@query("s31_corrupt_jsonl_census", oracle=_S31_ORACLE)
+@query(
+    "s31_corrupt_jsonl_census",
+    oracle=_S31_ORACLE,
+    eager=EAGER_FILES,
+)
 def s31_corrupt_jsonl_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S31: PERMISSIVE-mode JSONL ingest semantics PINNED — the JSON
     twin of S27's CSV census, planted with seven dirty lines chosen

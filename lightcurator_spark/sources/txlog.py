@@ -104,7 +104,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_STREAM, EAGER_TXLOG, query
 from lightcurator_spark.registry import load_table
 
 from lightcurator_spark.scratch import SCRATCH_ROOT as _SCRATCH
@@ -3840,7 +3840,11 @@ GROUP BY event_type
 """
 
 
-@query("s20_txlog_snapshot", oracle=_S20_ORACLE)
+@query(
+    "s20_txlog_snapshot",
+    oracle=_S20_ORACLE,
+    eager=EAGER_TXLOG,
+)
 def s20_txlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S20: log-structured table, latest snapshot — after v0 (append
     purchases), v1 (append clicks), v2 (OVERWRITE with errors), the
@@ -3874,7 +3878,11 @@ GROUP BY event_type
 """
 
 
-@query("s20b_txlog_time_travel", oracle=_S20B_ORACLE)
+@query(
+    "s20b_txlog_time_travel",
+    oracle=_S20B_ORACLE,
+    eager=EAGER_TXLOG,
+)
 def s20b_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S20b: time travel — reading the SAME table at version 1 must
     yield the pre-overwrite state (purchases + clicks) even though
@@ -3895,6 +3903,7 @@ def s20b_txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s20c_txlog_vacuum",
+    eager=EAGER_TXLOG,
     oracle=_S20_ORACLE,
     note="same expected state as s20: vacuuming below the horizon must "
     "not change what current readers see",
@@ -3934,7 +3943,11 @@ GROUP BY event_type
 """
 
 
-@query("s20d_txlog_checkpoint", oracle=_S20D_ORACLE)
+@query(
+    "s20d_txlog_checkpoint",
+    oracle=_S20D_ORACLE,
+    eager=EAGER_TXLOG,
+)
 def s20d_txlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S20d: checkpointed log fold — with checkpoint_interval=2 the
     committer publishes `<v>.checkpoint.json` (the full active set at
@@ -4000,7 +4013,11 @@ FROM events WHERE event_type IN ('purchase', 'click') GROUP BY event_type
 """
 
 
-@query("s20e_txlog_change_feed", oracle=_S20E_ORACLE)
+@query(
+    "s20e_txlog_change_feed",
+    oracle=_S20E_ORACLE,
+    eager=EAGER_TXLOG,
+)
 def s20e_txlog_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S20e: the txlog CHANGE FEED — the Delta-CDF/Iceberg-incremental
     verb that completes the lakehouse lifecycle (commit S20, time
@@ -4039,6 +4056,7 @@ GROUP BY event_type
 
 @query(
     "s20f_txlog_log_prune",
+    eager=EAGER_TXLOG,
     oracle=_S20D_ORACLE,
     note="same expected state as s20d: pruning the log below the "
     "anchoring checkpoint must not change what readers see",
@@ -4086,7 +4104,11 @@ def s20f_txlog_log_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("s21_stats_pruned_read", oracle=_S21_ORACLE)
+@query(
+    "s21_stats_pruned_read",
+    oracle=_S21_ORACLE,
+    eager=EAGER_TXLOG,
+)
 def s21_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S21: file skipping from log-recorded column stats — the Delta
     add-file `stats` / Iceberg manifest-metrics verb. Each commit
@@ -4147,6 +4169,7 @@ FROM events WHERE value >= 0 AND value < 500
 
 @query(
     "s20g_txlog_metadata_count",
+    eager=EAGER_TXLOG,
     oracle=_S20G_ORACLE,
     note="the metadata count must equal both the full scan and the "
     "source-of-record count — asserted in the query, hashed by the "
@@ -4204,6 +4227,7 @@ FROM lineitem WHERE l_orderkey % 256 BETWEEN 0 AND 63
 
 @query(
     "s22_zorder_txlog_pruned",
+    eager=EAGER_TXLOG,
     oracle=_S22_ORACLE,
     note="both censuses run over log-zone-map-PRUNED reads; the hash "
     "against the source of record proves pruning on either dimension "
@@ -4308,6 +4332,7 @@ FROM tgt t FULL JOIN src s ON t.user_id = s.user_id
 
 @query(
     "s23_txlog_merge_cow",
+    eager=EAGER_TXLOG,
     oracle=_S23_ORACLE,
     note="the hashed result is the POST-MERGE snapshot read back from "
     "the txlog, so the hash proves the copy-on-write rewrote exactly "
@@ -4442,6 +4467,7 @@ FROM tgt WHERE NOT (user_id >= 10 AND user_id < 15)
 
 @query(
     "s24_txlog_delete_cow",
+    eager=EAGER_TXLOG,
     oracle=_S24_ORACLE,
     note="the hashed result is the post-DELETE snapshot read back from "
     "the txlog; the query asserts most files were never rewritten and "
@@ -4523,6 +4549,7 @@ FROM events GROUP BY event_type
 
 @query(
     "t21_txlog_stream_sink",
+    eager=EAGER_STREAM,
     oracle=_T21_ORACLE,
     note="the hashed result is the txlog snapshot AFTER a multi-batch "
     "streaming write PLUS a deliberately replayed batch — the hash "
@@ -4626,6 +4653,7 @@ GROUP BY event_type
 
 @query(
     "s25_txlog_compaction",
+    eager=EAGER_TXLOG,
     oracle=_S25_ORACLE,
     note="the hashed result is the snapshot AFTER compaction — the "
     "hash proves bin-packing is behavior-invisible; the query asserts "
@@ -4691,6 +4719,7 @@ GROUP BY event_type
 
 @query(
     "s26_txlog_restore",
+    eager=EAGER_TXLOG,
     oracle=_S26_ORACLE,
     note="the hashed result is the snapshot after RESTORE TO VERSION 1 "
     "— byte-equal to the v1 state (purchases+clicks) even though v2 "
@@ -4741,6 +4770,7 @@ GROUP BY event_type
 
 @query(
     "s28_txlog_shallow_clone",
+    eager=EAGER_TXLOG,
     oracle=_S28_ORACLE,
     note="the hashed result is the CLONE's v1 snapshot — one scan mixing "
     "borrowed (source-owned, absolute-path) files with clone-owned "
@@ -4821,6 +4851,7 @@ GROUP BY event_type
 
 @query(
     "s29_txlog_as_of_timestamp",
+    eager=EAGER_TXLOG,
     oracle=_S29_ORACLE,
     note="AS OF TIMESTAMP between the v1 and v2 commit times must "
     "resolve to the v1 snapshot (purchases+clicks) — same expected "
@@ -4873,6 +4904,7 @@ GROUP BY event_type
 
 @query(
     "s30_txlog_wap_publish",
+    eager=EAGER_TXLOG,
     oracle=_S30_ORACLE,
     note="write-audit-publish: a staged batch that fails the audit is "
     "discarded without ever becoming visible at ANY version; the "
@@ -4953,6 +4985,7 @@ GROUP BY event_type
 
 @query(
     "s32_txlog_rename_column",
+    eager=EAGER_TXLOG,
     oracle=_S32_ORACLE,
     note="RENAME COLUMN is one metadata commit: the hashed census reads "
     "the logical `amount` column across files written before AND after "
@@ -5026,6 +5059,7 @@ GROUP BY 1, 2
 
 @query(
     "s33_txlog_add_column",
+    eager=EAGER_TXLOG,
     oracle=_S33_ORACLE,
     note="ADD COLUMN with a default is one metadata commit: the hashed "
     "census reads `channel` across pre-add files (default-filled) and "
@@ -5096,6 +5130,7 @@ FROM tgt WHERE NOT (user_id >= 10 AND user_id < 15)
 
 @query(
     "s34_txlog_delete_mor",
+    eager=EAGER_TXLOG,
     oracle=_S34_ORACLE,
     note="same expected state as s24's CoW delete, reached with ZERO "
     "data files rewritten (asserted) — the hashed result is the "
@@ -5189,6 +5224,7 @@ GROUP BY event_type
 
 @query(
     "s35_txlog_drop_column",
+    eager=EAGER_TXLOG,
     oracle=_S35_ORACLE,
     note="DROP COLUMN is one metadata commit: the hashed census reads "
     "the post-drop logical schema across files written before AND "
@@ -5263,6 +5299,7 @@ GROUP BY e.user_id
 
 @query(
     "s36_txlog_erasure_cascade",
+    eager=EAGER_TXLOG,
     oracle=_S36_ORACLE,
     note="the hashed result is the erasure AUDIT built from the change "
     "feed ALONE (never the pre-erasure snapshot): per erased user, the "
@@ -5399,6 +5436,7 @@ GROUP BY user_id
 
 @query(
     "s37_txlog_incremental_consumer",
+    eager=EAGER_TXLOG,
     oracle=_S37_ORACLE,
     note="the hashed result is the DOWNSTREAM txlog table's final "
     "snapshot, maintained purely from the upstream CHANGE FEED "
@@ -5516,6 +5554,7 @@ GROUP BY event_type
 
 @query(
     "s38_txlog_tags",
+    eager=EAGER_TXLOG,
     oracle=_S38_ORACLE,
     note="the hashed result is read_snapshot BY TAG NAME after a vacuum "
     "and a log prune that killed every untagged pre-horizon version — "
@@ -5627,6 +5666,7 @@ FROM merged
 
 @query(
     "s39_txlog_upsert_mor",
+    eager=EAGER_TXLOG,
     oracle=_S39_ORACLE,
     note="the hashed result is the post-UPSERT snapshot: replaced rows "
     "resolve through file-scoped deletion vectors while their new "
@@ -5726,6 +5766,7 @@ FROM full_
 
 @query(
     "s40_txlog_cdf_update_images",
+    eager=EAGER_TXLOG,
     oracle=_S40_ORACLE,
     note="the hashed result is the change-feed census over an UPSERT "
     "range with update images resolved: replaced keys surface as "
@@ -5815,6 +5856,7 @@ FROM merged GROUP BY 1
 
 @query(
     "s41_bulk_upsert_mor",
+    eager=EAGER_TXLOG,
     oracle=_S41_ORACLE,
     note="the hashed result is the post-upsert snapshot census after a "
     "BULK MoR upsert (thousands of matched keys): the deletion vectors "
@@ -5921,6 +5963,7 @@ GROUP BY event_type
 
 @query(
     "s42_txlog_bulk_erasure",
+    eager=EAGER_TXLOG,
     oracle=_S42_ORACLE,
     note="the hashed result is the survivor census after a two-phase "
     "BULK GDPR erasure: phase 1 is one metadata-only sidecar-DV commit "
@@ -6038,6 +6081,7 @@ GROUP BY event_type
 
 @query(
     "s43_txlog_partition_evolution",
+    eager=EAGER_TXLOG,
     oracle=_S43_ORACLE,
     note="the hashed result is a census over a table whose files span "
     "TWO partition specs (unpartitioned v0 appends, then event_type-"
@@ -6141,6 +6185,7 @@ GROUP BY 1
 
 @query(
     "s44_txlog_schema_enforcement",
+    eager=EAGER_TXLOG,
     oracle=_S44_ORACLE,
     note="the hashed result is the census over a table widened by a "
     "merge_schema append: pre-widening rows read the new column as "
@@ -6235,6 +6280,7 @@ GROUP BY event_type
 
 @query(
     "s45_txlog_maintenance",
+    eager=EAGER_TXLOG,
     oracle=_S45_ORACLE,
     note="the hashed result is the census AFTER the maintenance cycle "
     "(compact → vacuum → prune_log) on a table carrying all three "
@@ -6357,6 +6403,7 @@ FROM rows_ GROUP BY event_type
 
 @query(
     "s46_txlog_branch",
+    eager=EAGER_TXLOG,
     oracle=_S46_ORACLE,
     note="the hashed result is MAIN's snapshot after a fast-forward "
     "merge of a branch that appended views and MoR-deleted a slice "
@@ -6476,6 +6523,7 @@ FROM rows_ GROUP BY event_type
 
 @query(
     "s46b_txlog_branch_rebase",
+    eager=EAGER_TXLOG,
     oracle=_S46B_ORACLE,
     note="the hashed result is MAIN after diverge → REBASE → "
     "fast-forward: main moved past the fork (errors appended) while "
@@ -6553,6 +6601,7 @@ SELECT * FROM (VALUES
 
 @query(
     "s49_txlog_fsck",
+    eager=EAGER_TXLOG,
     oracle=_S49_ORACLE,
     note="the hashed result is the FSCK census over a table carrying "
     "every byte class at a known count — 8 active / 4 historical "
@@ -6643,6 +6692,7 @@ FROM events e JOIN target t ON e.event_id = t.eid
 
 @query(
     "s47_bloom_file_stats",
+    eager=EAGER_TXLOG,
     oracle=_S47_ORACLE,
     note="the hashed result is a POINT LOOKUP read through per-file "
     "Bloom bits on a layout engineered so zone maps skip NOTHING "
@@ -6749,6 +6799,7 @@ FROM rows_ GROUP BY user_id
 
 @query(
     "s48_multi_table_txn",
+    eager=EAGER_TXLOG,
     oracle=_S48_ORACLE,
     note="the hashed result is the post-commit PAIR-CONSISTENCY "
     "census (fact row counts vs index counts per user) after a fact "
@@ -6841,6 +6892,7 @@ def s48_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "m7_bitemporal_as_of",
+    eager="commits a demo TxLogTable and collects one as-of row per leg",
     oracle=_M7_ORACLE,
     note="the hashed result is the VALID-time census at one probe "
     "instant, read at three TRANSACTION times (txlog versions): late "

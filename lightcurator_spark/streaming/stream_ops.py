@@ -24,7 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightcurator_spark.plans.registry import query
+from lightcurator_spark.plans.registry import EAGER_STREAM, EAGER_TXLOG, query
 from lightcurator_spark.scratch import SCRATCH_ROOT
 from lightcurator_spark.registry import load_table
 from lightcurator_spark.session import configure
@@ -125,6 +125,7 @@ def t1_tumbling_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t1_tumbling_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true streaming run; tests assert ≡ t1_tumbling_batch",
 )
@@ -210,6 +211,7 @@ def t3_session_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t4_watermark_late_drop",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: watermark semantics are streaming-only (SURVEY §2.8)",
 )
@@ -249,6 +251,7 @@ def t5_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t5_dedup_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: dropDuplicatesWithinWatermark keeps the FIRST arrival "
     "(arrival order, not event time) — tests assert key-set ≡ batch twin",
@@ -277,7 +280,11 @@ FROM events e JOIN customer c ON e.user_id + 1 = c.c_custkey
 """
 
 
-@query("t6_stream_static_join", oracle=_T6_ORACLE)
+@query(
+    "t6_stream_static_join",
+    oracle=_T6_ORACLE,
+    eager=EAGER_STREAM,
+)
 def t6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6: TRUE streaming-static join — the unbounded events stream
     enriched against the static customer dim (broadcast to every task;
@@ -293,6 +300,7 @@ def t6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t7_foreachbatch_sink",
+    eager=EAGER_STREAM,
     oracle="""
     SELECT event_type, count(*) AS n,
            floor((sum(value)) * 10000 + 0.5) / 10000 AS sum_value
@@ -341,7 +349,11 @@ FROM events GROUP BY user_id
 """
 
 
-@query("t8_stateful_running_totals", oracle=_T8_ORACLE)
+@query(
+    "t8_stateful_running_totals",
+    oracle=_T8_ORACLE,
+    eager=EAGER_STREAM,
+)
 def t8_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T8: custom stateful streaming operator — per-user running totals
     held in explicit GroupState via ``applyInPandasWithState`` (the
@@ -400,6 +412,7 @@ def t8_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t3_session_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: streaming session windows require a watermark; "
     "tests assert emitted sessions ⊆ t3_session_batch and equality on "
@@ -482,6 +495,7 @@ def t9_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t9_interval_join_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true stream-stream join; tests assert ≡ the batch twin",
 )
@@ -502,6 +516,7 @@ def t9_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t2_sliding_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true streaming run; tests assert ≡ t2_sliding_batch",
 )
@@ -536,7 +551,11 @@ FROM events GROUP BY user_id
 """
 
 
-@query("t10_incremental_merge_stream", oracle=_T10_ORACLE)
+@query(
+    "t10_incremental_merge_stream",
+    oracle=_T10_ORACLE,
+    eager=EAGER_STREAM,
+)
 def t10_incremental_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T10: streaming MERGE — the incremental-curation capstone: M1's
     upsert applied per micro-batch via foreachBatch, maintaining a
@@ -737,6 +756,7 @@ if _protobuf_available():  # pragma: no cover - env-dependent registration
 
 @query(
     "t11_checkpoint_restart",
+    eager=EAGER_STREAM,
     oracle="""
     SELECT user_id, CAST(count(*) AS BIGINT) AS n,
            floor((sum(value)) * 10000 + 0.5) / 10000 AS sum_value
@@ -892,6 +912,7 @@ def t12_outer_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t12_outer_join_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true stream-stream OUTER join; null-extended rows "
     "for the stream's tail stay buffered past the final watermark by "
@@ -975,6 +996,7 @@ def _ewma_stateful(ev: DataFrame) -> DataFrame:
 
 @query(
     "t14_stateful_ewma_stream",
+    eager=EAGER_STREAM,
     oracle=_W11_STREAM_ORACLE,
 )
 def t14_stateful_ewma_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1112,6 +1134,7 @@ def _ewma_stateful_ooo(ev: DataFrame, delay: str) -> DataFrame:
 
 @query(
     "t14b_stateful_ewma_ooo_stream",
+    eager=EAGER_STREAM,
     oracle=_W11_STREAM_ORACLE,
 )
 def t14b_stateful_ewma_ooo_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1198,6 +1221,7 @@ def t13_windowed_distinct_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t13_windowed_distinct_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: streaming distinct is CHAINED stateful operators "
     "(dropDuplicatesWithinWatermark -> windowed agg, Spark 3.5+); the "
@@ -1282,6 +1306,7 @@ def t15_semi_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t15_semi_join_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true stream-stream LEFT SEMI join; tests assert "
     "the availableNow catch-up emits exactly the batch twin's rows "
@@ -1381,6 +1406,7 @@ def t16_full_outer_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t16_full_outer_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true stream-stream FULL OUTER join; tests assert "
     "matched rows ≡ batch and every missing null-extension sits in "
@@ -1423,7 +1449,11 @@ FROM events GROUP BY user_id, event_type
 """
 
 
-@query("t17_streaming_ivm", oracle=_T17_ORACLE)
+@query(
+    "t17_streaming_ivm",
+    oracle=_T17_ORACLE,
+    eager=EAGER_STREAM,
+)
 def t17_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T17: streaming incremental view maintenance — M5's delta-merge
     recipe run FROM a stream: each micro-batch partial-aggregates to
@@ -1537,6 +1567,7 @@ def t17_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t18_freshness_stream",
+    eager=EAGER_STREAM,
     oracle="""
     WITH seg AS (
       SELECT event_type, user_id % 100 AS user_bucket,
@@ -1673,6 +1704,7 @@ def _zscore_stateful(ev: DataFrame) -> DataFrame:
 
 @query(
     "t19_zscore_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only by the driver's single-comparison rule, but the "
     "answer itself is fully hash-checked: the equality test pins the "
@@ -1903,6 +1935,7 @@ def _write_ooo_bands(spark: SparkSession, sf_dir: str, name: str):
 
 @query(
     "t19b_zscore_ooo_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only by the driver's single-comparison rule, but the "
     "answer itself is fully hash-checked one hop removed: the query "
@@ -1993,6 +2026,7 @@ HAVING count(*) > (SELECT n FROM tot) / 64.0
 
 @query(
     "t20_heavy_hitters_stream",
+    eager=EAGER_STREAM,
     oracle=_T20_ORACLE,
     note="complete-mode count fold is exact under availableNow, so the "
     "streaming monitor carries A16's full value hash (the T18 rule)",
@@ -2117,6 +2151,7 @@ def t22_double_fire_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t22_double_fire_stream",
+    eager=EAGER_STREAM,
     oracle=None,
     note="rows-only: true stream-stream SELF-join; tests assert ≡ the "
     "batch twin's suspect set",
@@ -2264,6 +2299,7 @@ SELECT user_id, n_epochs, sum_u FROM final
 
 @query(
     "t23_mor_cdf_batch",
+    eager=EAGER_TXLOG,
     oracle=_T23_ORACLE,
     note="the hashed result is a row-level serving state maintained "
     "PURELY from the change feed with update images, hop by hop, over "
@@ -2305,6 +2341,7 @@ def t23_mor_cdf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t23_mor_cdf_stream",
+    eager=EAGER_STREAM,
     note="rows-only by necessity (true streaming run): the same feed "
     "chunks flow through a file-source stream (maxFilesPerTrigger=1, "
     "one micro-batch per table version) into a batch-id-keyed "
@@ -2530,6 +2567,7 @@ GROUP BY event_type
 
 @query(
     "t24_txlog_stream_source",
+    eager=EAGER_STREAM,
     oracle=_T24_ORACLE,
     note="the hashed result is the census of everything a TRUE "
     "Structured Streaming query received through the custom "

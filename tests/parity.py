@@ -11,12 +11,14 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
 
 import duckdb
 
 from lightcurator_spark.registry import TABLES
 
 SF_DIR = "/root/testdata/sf0.01"
+TINY_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 def duck_connection(sf_dir: str = SF_DIR) -> duckdb.DuckDBPyConnection:
@@ -88,3 +90,19 @@ def compare(spark, spec, sf_dir: str = SF_DIR) -> None:
             f"{spec.name}: value mismatch\n  spark-only: {diff_s}\n  duck-only:  {diff_d}"
             f"\n  cols(sorted): {sorted(s_cols)}"
         )
+
+
+def corpus_variant(tmp_path, tables: dict, base: str = TINY_SF_DIR) -> str:
+    """A corpus dir under ``tmp_path``: every table of ``base``
+    symlinked, except those in ``tables`` (name → ``pyarrow.Table``),
+    which are written as parquet. Both engines read the same files."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "corpus"
+    d.mkdir()
+    for t in TABLES:
+        if t in tables:
+            pq.write_table(tables[t], str(d / f"{t}.parquet"))
+        else:
+            os.symlink(f"{base}/{t}.parquet", str(d / f"{t}.parquet"))
+    return str(d)

@@ -2509,6 +2509,44 @@ def test_candidate_keys_facade_matches_dq9(spark):
     assert got == want
 
 
+def test_candidate_keys_census_matches_count_distinct_on_every_type(spark):
+    """The census's (bigint, string) value encoding is injective per
+    column: on doubles (-0.0 and 0.0 and NaN), timestamps, dates,
+    binary, booleans and decimals, and under a column name that needs
+    quoting, its distinct and null counts equal Spark's own
+    ``count(DISTINCT)`` and null count. A nested column is refused."""
+    import datetime as dt
+    import decimal
+
+    import pytest
+
+    rows = [
+        (0.0, dt.datetime(2024, 1, 1, 1, 30), dt.date(2024, 1, 1), b"\x00", True, decimal.Decimal("1.10"), "a"),
+        (-0.0, dt.datetime(2024, 1, 1, 1, 30), dt.date(2024, 1, 2), b"\xff", False, decimal.Decimal("1.1"), "a"),
+        (float("nan"), dt.datetime(2024, 1, 2), None, b"\x00", None, decimal.Decimal("2.00"), "it's"),
+        (float("nan"), None, dt.date(2024, 1, 1), None, True, None, None),
+        (None, dt.datetime(2024, 1, 2), dt.date(2024, 1, 3), b"", False, decimal.Decimal("2"), "b"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "x double, ts timestamp, d date, bin binary, flag boolean, "
+        "amt decimal(10,2), `we'ird``name` string",
+    )
+    cols = df.columns
+    got = {
+        r.column_id: (r.n_rows, r.n_distinct, r.n_null)
+        for r in api.candidate_keys(df, cols).collect()
+    }
+    ref = df.agg(
+        *[F.count_distinct(F.col(f"`{c.replace('`', '``')}`")) for c in cols],
+        *[F.count(F.when(F.col(f"`{c.replace('`', '``')}`").isNull(), 1)) for c in cols],
+    ).first()
+    want = {c: (5, ref[i], ref[len(cols) + i]) for i, c in enumerate(cols)}
+    assert got == want
+    with pytest.raises(TypeError, match="atomic"):
+        api.candidate_keys(df.selectExpr("array(x) AS v"), ["v"])
+
+
 def test_dedup_impact_facade_matches_l44(spark):
     out = api.dedup_impact(_renamed(spark), "x_source", "x_text", "x_doc_id")
     _assert_matches(spark, out, "l44_dedup_impact_report")

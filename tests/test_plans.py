@@ -14,13 +14,64 @@ from __future__ import annotations
 
 import contextlib
 import io
+import itertools
 
 import pytest
 
 from lightcurator_spark.plans import load_all
+from tests.parity import TINY_SF_DIR
 
 SF_DIR = "/root/testdata/sf0.01"
 SPECS = load_all()
+
+
+_BUILDS = itertools.count()
+
+
+def build_jobs(spark, name: str, sf_dir: str) -> tuple:
+    """Build query ``name`` under a job group of its own; return the
+    DataFrame and the ids of the Spark jobs the build started. Every
+    corpus table is loaded first: a table's first load in a session
+    infers its parquet schema with one job, and ``load_table`` keeps
+    the DataFrame for every later build."""
+    from lightcurator_spark.registry import TABLES, load_table
+
+    for t in TABLES:
+        load_table(spark, sf_dir, t)
+    sc = spark.sparkContext
+    group = f"build/{name}/{next(_BUILDS)}"
+    sc.setJobGroup(group, group)
+    try:
+        df = SPECS[name].fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_undeclared_builds_start_no_job(spark):
+    """Plan construction starts no hidden Spark job: building any
+    query that does not declare ``eager`` (its reason to run jobs at
+    build time) must leave its job group empty. Builds at sf0.001.
+    Job groups are per thread, so read-only builds run on a small
+    pool; the s/t/f families, which write scratch fixtures, build in
+    order (as in test_plan_sweep)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    sf_dir = TINY_SF_DIR
+    names = [n for n in sorted(SPECS) if not SPECS[n].eager]
+
+    def jobs(name):
+        return name, len(build_jobs(spark, name, sf_dir)[1])
+
+    # in-order builds first: they also load the corpus tables from
+    # this thread, before the pool's threads can race to load them
+    counts = dict(jobs(n) for n in names if n[0] in "stf")
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        counts.update(pool.map(jobs, [n for n in names if n[0] not in "stf"]))
+    offenders = {n: c for n, c in counts.items() if c}
+    assert not offenders, (
+        f"builds that start Spark jobs without declaring eager: {offenders}"
+    )
 
 
 def plan(spark, name: str, mode: str = "formatted") -> str:
@@ -1386,45 +1437,20 @@ def test_l39_overlap_join_is_equi_never_cartesian(spark):
 
 
 def test_g6_kcore_semi_joins_never_cartesian(spark):
-    """G6: each peel round is hash semi-joins + count agg; the edge
-    list is built from one lineitem scan (cached), never all-pairs.
-    The per-round plans are hidden behind the r12 localCheckpoint
-    lineage cut in the full query (the g9b situation), so the
-    tripwire explains ONE round built exactly as the operator builds
-    it, and separately asserts the full query's final plan IS the
-    truncated checkpoint scan (no surviving join → the cut held)."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from lightcurator_spark.operators.series_ext import _g6_sym_edges
-
-    sym = _g6_sym_edges(spark, SF_DIR)
-    survivors = sym.select(F.col("src").alias("node")).distinct()
-    rnd = (
-        sym.join(
-            survivors.select(F.col("node").alias("src")), "src", "left_semi"
-        )
-        .join(
-            survivors.select(F.col("node").alias("dst")), "dst", "left_semi"
-        )
-        .groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= 2)
-    )
+    """G6: round 1 is a count over the edge list (one lineitem scan,
+    cached), and each later round one hash semi-join of it against
+    the previous survivors plus a count. The three rounds nest into
+    one linear plan: two LeftSemi joins, never all-pairs, no lineage
+    cut (ExistingRDD), and building it starts no Spark job."""
+    df, jobs = build_jobs(spark, "g6_kcore_peel", SF_DIR)
+    assert jobs == [], jobs
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        rnd.explain("simple")
+        df.explain("simple")
     p = buf.getvalue()
     assert p.count("LeftSemi") == 2, p
     assert "CartesianProduct" not in p, p
-    # full query: the final plan must be the checkpoint scan, proving
-    # the per-round lineage cut is in place (without it the tree
-    # doubles per round — measured 65x wall at 16x data)
-    full = plan(spark, "g6_kcore_peel", mode="simple")
-    assert "ExistingRDD" in full, full
-    assert "Join" not in full, full
+    assert "ExistingRDD" not in p, p
 
 
 def test_s17_scan_reads_single_partition(spark):

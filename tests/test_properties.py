@@ -307,6 +307,32 @@ def test_l4c_vectorized_matches_bruteforce(spark):
         assert abs(jvm[k] - vec[k]) < 1e-9, (k, jvm[k], vec[k])
 
 
+def test_embedding_matrix_honours_list_array_slice():
+    """The executor-side embeddings matrix reshapes ``flatten()``, which
+    honours a sliced ListArray's offset; its raw ``values`` buffer
+    still holds the rows outside the slice."""
+    import pyarrow as pa
+
+    from lightcurator_spark.operators.similarity import _list_matrix
+
+    full = pa.array(
+        [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0], [7.0, 8.0]], pa.list_(pa.float32())
+    )
+    assert _list_matrix(full.slice(1, 2), 2).tolist() == [[3.0, 4.0], [5.0, 6.0]]
+
+
+def test_embeddings_not_visible_raises_named_error(tmp_path):
+    import pytest
+
+    from lightcurator_spark.operators.similarity import (
+        EmbeddingsNotVisibleError,
+        _read_embeddings_numpy,
+    )
+
+    with pytest.raises(EmbeddingsNotVisibleError, match="not visible"):
+        _read_embeddings_numpy(str(tmp_path))
+
+
 def test_l7_frame_sample_matches_python_reference(spark):
     """The frame sampler must emit exactly the frames a plain-Python
     reference computes: every 4th 64-byte chunk of the deterministic
