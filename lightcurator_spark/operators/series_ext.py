@@ -3288,7 +3288,9 @@ def g11_cooccurrence_projection(
     grouping in a single part-keyed shuffle, replacing distinct + a
     two-sided sorted SMJ self-join), then pair generation splits by
     degree: parts at or under the cap run a per-task NumPy kernel
-    (same-size stacking + triu indices + one np.unique per task —
+    (same-size stacking + triu indices + one np.unique per Arrow
+    batch, merged into the task's running (pair, count) arrays, so
+    kernel memory follows distinct pairs, not wedges —
     each task emits its wedge counts ALREADY AGGREGATED, so the only
     pair-sized exchange carries per-task partials, never raw wedges);
     parts over the cap explode back to (p, s) and take the codegen
@@ -3319,13 +3321,27 @@ def g11_cooccurrence_projection(
     low = baskets.filter(F.size("ss") <= deg_cap).select("ss")
     high = baskets.filter(F.size("ss") > deg_cap)
 
+    def merge_counts(ka, ca, kb, cb):
+        # both key arrays sorted and distinct: a stable sort of the two
+        # runs is one merge pass, and reduceat sums equal neighbours
+        k = np.concatenate([ka, kb])
+        c = np.concatenate([ca, cb])
+        o = np.argsort(k, kind="stable")
+        k, c = k[o], c[o]
+        first = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+        return k[first], np.add.reduceat(c, first)
+
     def pair_counts(batches):
-        keys_all = []
+        # one np.unique per batch, merged into the task's running
+        # (key, count) arrays: memory follows distinct pairs, not wedges
+        keys = np.empty(0, dtype=np.int64)
+        cnts = np.empty(0, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
             arrs = pdf["ss"].to_numpy()
             sizes = np.fromiter((len(a) for a in arrs), dtype=np.int64)
+            wedges = []
             for k in np.unique(sizes):
                 if k < 2:
                     continue
@@ -3339,16 +3355,16 @@ def g11_cooccurrence_projection(
                     raise ValueError("g11: suppkey >= 2^31 breaks pair packing")
                 iu, ju = np.triu_indices(k, 1)
                 # sorted distinct arrays: position i<j => value a<b
-                keys_all.append(
-                    (M[:, iu].ravel() << np.int64(32)) | M[:, ju].ravel()
-                )
-        if keys_all:
-            keys, cnts = np.unique(np.concatenate(keys_all), return_counts=True)
+                wedges.append((M[:, iu].ravel() << np.int64(32)) | M[:, ju].ravel())
+            if wedges:
+                bk, bc = np.unique(np.concatenate(wedges), return_counts=True)
+                keys, cnts = merge_counts(keys, cnts, bk, bc.astype(np.int64))
+        if keys.size:
             yield pd.DataFrame(
                 {
                     "supp_a": keys >> np.int64(32),
                     "supp_b": keys & np.int64(0xFFFFFFFF),
-                    "c": cnts.astype(np.int64),
+                    "c": cnts,
                 }
             )
 

@@ -237,7 +237,7 @@ def l4_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ORIGINAL JVM fold and re-ranked by the identical window, so
     the emitted rows are byte-identical (oracle hash re-verified)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "nv", F.sqrt(dot("embedding", "embedding"))
@@ -259,11 +259,11 @@ def l4_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         if q_ids.size == 0:  # degenerate corpus: no queries, no pairs
             return
         qn = np.sqrt((Qm * Qm).sum(axis=1))
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            B = np.array(list(pdf["embedding"]), dtype=np.float64)
+            ids = rb.column("vec_id").to_numpy().astype(np.int64)
+            B = _list_matrix(rb.column("embedding"), rb.num_rows)
             bn = np.sqrt((B * B).sum(axis=1))
             with np.errstate(divide="ignore", invalid="ignore"):
                 r4 = (
@@ -288,9 +288,11 @@ def l4_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             mask = (r4 >= (s5[:, None] - 0.0002)) & ~self_mask
             i, j = np.nonzero(mask)
             if i.size:
-                yield pd.DataFrame({"query_id": q_ids[i], "vec_id": ids[j]})
+                yield pa.RecordBatch.from_pydict(
+                    {"query_id": q_ids[i], "vec_id": ids[j]}
+                )
 
-    cand = e.select("vec_id", "embedding").mapInPandas(
+    cand = e.select("vec_id", "embedding").mapInArrow(
         gen, "query_id long, vec_id long"
     )
     # exact verification: the ORIGINAL fold arithmetic on survivors only
@@ -1681,14 +1683,14 @@ def _covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §4.2): the map-side pair build exploded n·D² rows (8.2 M
     # at sf0.1, 5.3 s fresh) through codegen + hash agg; each task now
     # reduces its rows to ONE D×D GEMM partial (Sxy = AᵀA, Sx = ΣA)
-    # inside mapInPandas and emits D² partial rows, so the shuffle and
+    # inside mapInArrow and emits D² partial rows, so the shuffle and
     # final agg see parts × D² rows — the same network bound, far
     # cheaper per-task work. Float-sum-order caveat unchanged from the
     # explode form: per-(i,j) sums were already partition-order
     # accumulations, and the R4 export (1e-4 quantum) absorbs the
     # ~1e-12 reduction-order difference (driver-sim re-verified).
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     e = load_table(spark, sf_dir, "embeddings")
 
@@ -1696,10 +1698,10 @@ def _covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         C = None
         sx = None
         n = 0
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            A = np.array(list(pdf["embedding"]), dtype=np.float64)
+            A = _list_matrix(rb.column("embedding"), rb.num_rows)
             if C is None:
                 d = A.shape[1]
                 C = np.zeros((d, d))
@@ -1711,7 +1713,7 @@ def _covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         d = C.shape[0]
         i, j = np.meshgrid(np.arange(1, d + 1), np.arange(1, d + 1), indexing="ij")
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {
                 "i": i.ravel().astype(np.int32),
                 "j": j.ravel().astype(np.int32),
@@ -1726,7 +1728,7 @@ def _covariance_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         e.select("embedding")
         .repartition(par)
-        .mapInPandas(
+        .mapInArrow(
             partials,
             "i int, j int, xy double, x double, y double, n long",
         )
@@ -1759,14 +1761,11 @@ def l35_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of the SAME group (each vector contributes x_i once per j), so
     no second pass and no totals join-back.
 
-    Scale: the pair table is built MAP-SIDE (nested transform +
-    flatten + explode — one scan, no self-join; the oracle's
-    vec_id-keyed self-join is the slow-but-obviously-correct twin) and
-    partial aggregation collapses each task to ≤ 4 096 rows before the
-    only shuffle, so network cost is parts × D², independent of corpus
-    size. At very large D, swap the explode for an Arrow-batch GEMM
-    partial (the l4c kernel shape) — same plan skeleton, better
-    constants.
+    Scale: each task reduces its share of the corpus to one D×D GEMM
+    partial (Sxy = AᵀA and Sx = ΣA, accumulated over its Arrow batches
+    inside ``mapInArrow``; the oracle's vec_id-keyed self-join is the
+    slow-but-obviously-correct twin) and emits D² partial rows, so the
+    only shuffle carries parts × D² rows, independent of corpus size.
     """
     return _covariance_terms(spark, sf_dir).select(
         "i", "j", R4(F.col("cov")).alias("cov")
@@ -1787,7 +1786,7 @@ def l35b_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     principal components — the dimensionality-reduction step feeding
     visualization, whitening, and compact ANN. The decomposition
     pipeline is the canonical large-scale split: the covariance
-    reduces DISTRIBUTED (L35's map-side pair build), the 64×64 eigen
+    reduces DISTRIBUTED (L35's per-task GEMM partials), the 64×64 eigen
     problem is solved once on the driver (it is D², never N), and the
     projection ships back as a broadcast matrix applied map-side with
     the JVM dot kernel — the corpus never shuffles and never collects.

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Runtime-settable confs applied to ANY session the engine touches.
 _RUNTIME_CONFS: dict[str, str] = {
     # events.parquet stores ts as timestamp[ns]; without this flag the
@@ -105,6 +107,15 @@ def get_session(
     up to 2.15× (g5) falls to 0.69–1.18× at 16x, with AQE-on already
     WINNING on the heaviest shape, and the finished adaptive plans
     carry AQEShuffleRead nodes (tripwired in tests/test_plans.py).
+
+    Python workers fork from the engine's daemon
+    (``lightcurator_spark.pydaemon``). Each task's worker setup calls
+    ``importlib.invalidate_caches()``, which before CPython 3.12 re-reads
+    the directory of every zip and jar on the worker path, 0.14-0.31 s
+    per task; the daemon re-reads an archive only when its stat changed.
+    On Python >= 3.12 it is the stock daemon. The daemon module is a
+    static conf, so sessions the driver builds (``configure(spark)``)
+    keep the stock daemon.
     """
     if cpus is None:
         cpus = int(
@@ -142,6 +153,11 @@ def get_session(
             "spark.sql.codegen.cache.maxEntries",
             os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4000"),
         )
+        # the package's parent directory goes on the workers' path so the
+        # daemon, and closures that import the package, load from any
+        # working directory
+        .config("spark.python.daemon.module", "lightcurator_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -85,3 +85,16 @@ def test_dq9_matches_oracle_on_nulls_and_an_empty_table(spark, tmp_path):
     }
     assert rows["customer.c_nationkey"].n_null == 22
     assert rows["supplier.s_suppkey"].n_rows == 0
+
+
+def test_g11_matches_oracle_with_many_batches_per_task(spark):
+    """G11's kernel counts wedges per Arrow batch and merges the
+    partial (pair, count) arrays; with small batches every task sees
+    several, and a pair split across batches must still sum."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "40")
+    try:
+        compare(spark, SPECS["g11_cooccurrence_projection"])
+    finally:
+        spark.conf.set(key, old)
