@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lightcurator_spark.operators.dedup import gram_array
+from lightcurator_spark.api.dedup import gram_array
 
 
 def pack_sequences(

@@ -1,16 +1,18 @@
-"""Deduplication operators — SURVEY §2.10 L1–L3, wave W4.
+"""Deduplication queries — the L family's registry entries.
 
-The LLM-data-pipeline mandate (BASELINE.json north_star): exact dedup,
-exact n-gram-Jaccard near-dup, and MinHash-LSH banding as the 100 TB
-scale path.
+Each ``@query`` checks one dedup operator on the test corpus against a
+DuckDB oracle or a rows check. Where the operator is part of the user
+API, the query is its instantiation: input preparation, one call into
+``lightcurator_spark.api.dedup`` with the query's literals, then edge
+shaping (renames, ``R4`` 4-dp rounding, label mapping). So the oracle
+checks the same body a library user calls. L1, L1b, L1c, L2, L9, L9b,
+L21, L22 and L31/L31b have no api twin and keep their bodies here.
 
 Scale design:
 - L1 keys the whole corpus on md5(text) — one shuffle on a uniform
   128-bit key; no skew by construction.
-- L2 is exact and quadratic in the worst case (self-join on shingles);
-  it is the small-data oracle for L3. Its shingle join key is a 5-gram
-  string — frequency-skewed shingles are the hot keys, which AQE's
-  skew-join split handles at runtime.
+- L2 is exact; it is the small-data oracle for L3. It keys grams by a
+  128-bit hash pair and explodes doc pairs from each gram's doc set.
 - L3 replaces the shingle self-join with banded MinHash signatures:
   candidate pairs only form when a full band (r consecutive min-hashes)
   collides, so the join fan-out collapses from |shingle matches| to
@@ -21,10 +23,12 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lightcurator_spark import api
+from lightcurator_spark.api.dedup import gram_keys, symspell_fuzzy_join
 from lightcurator_spark.plans.registry import EAGER_BUCKETED, EAGER_ITERATES, query
 from lightcurator_spark.registry import load_table
 
@@ -32,80 +36,6 @@ from lightcurator_spark.registry import load_table
 def R4(c):
     """Bit-stable 4-dp rounding; see relational.R4."""
     return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
-
-def gram_array(text_col: str, n: int, distinct: bool = True) -> Column:
-    """Each row's n-token shingles of ``text_col`` as ONE array, built
-    entirely map-side; ``distinct=False`` keeps within-row repeats.
-
-    Tokens are whitespace-split (the corpus is space-separated lowercase
-    tokens, FIXTURES.md); shingle i joins tokens i..i+n-1. The token
-    array is bound ONCE per row through the single-element-array lambda
-    (``transform(array(split(..)), t -> ..)``); re-evaluating
-    ``split(text)`` at each use inside the generator measured 1.31 s vs
-    0.35 s for the bare 3-gram explode at sf0.1. ``sequence(1, 0)`` is
-    DESCENDING, so rows shorter than n tokens must take the explicit
-    empty-array branch, not a ``slice(…, 0, n)`` crash.
-
-    Distinct mode dedups with ``array_distinct`` inside the map
-    expression: two equal (doc, shingle) pairs can only come from the
-    same document, so within-doc dedup IS global dedup, and no
-    corpus-sized ``(doc, shingle)`` distinct exchange is needed. Raw
-    mode is for consumers whose semantics make dedup a no-op (semi-join
-    stream sides, build sides that re-``distinct()`` anyway): the
-    optimizer can drop a ``.distinct()`` operator under a semi join but
-    cannot see into the map expression, so they opt out here (l15's
-    semi-join leg measured 1.02 s vs 0.59 s).
-    """
-    col = text_col.replace("`", "``")
-    grams = (
-        f"flatten(transform(array(split(`{col}`, ' ')), t ->"
-        f" case when size(t) >= {n} then"
-        f" transform(sequence(1, size(t) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(t, i, {n})))"
-        f" else array() end))"
-    )
-    return F.expr(f"array_distinct({grams})" if distinct else grams)
-
-
-def shingles(docs: DataFrame, n: int = 5) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs of n-token shingles of ``text``."""
-    return docs.select("doc_id", gram_array("text", n).alias("grams")).select(
-        "doc_id", F.explode("grams").alias("shingle")
-    )
-
-
-def shingles_raw(docs: DataFrame, n: int = 5) -> DataFrame:
-    """(doc_id, shingle) WITH within-doc duplicates (see gram_array)."""
-    return docs.select(
-        "doc_id", F.explode(gram_array("text", n, distinct=False)).alias("shingle")
-    )
-
-
-def gram_keys(docs: DataFrame, key: str, n: int) -> DataFrame:
-    """(key, h1, h2) — one row per distinct n-gram of each row's
-    ``text``, the gram carried as a 128-bit key of two xxhash64 lanes
-    (the l11 md5-gram device, integer-keyed): a per-gram aggregation
-    groups on two longs instead of a ~25-byte string (measured 1.69 s
-    vs 1.22 s for l39's agg at sf0.1) and a gram exchange carries 16
-    bytes per gram at any corpus size.
-
-    The second lane hashes the salt FIRST, ``xxhash64('s', g)``, i.e.
-    the gram under a different seed — the MinHash construction of l3.
-    ``xxhash64(g, 's')`` would seed-chain the salt on the first lane's
-    value, making h2 a function of h1 and the key 64-bit. With two
-    independent lanes the collision bound is ~n²/2^129 (≈1e-15 at
-    10^12 grams), the exactness class of l11's md5 keys.
-    """
-    lanes = F.transform(
-        gram_array("text", n),
-        lambda g: F.struct(
-            F.xxhash64(g).alias("h1"), F.xxhash64(F.lit("s"), g).alias("h2")
-        ),
-    )
-    return docs.select(key, F.explode(lanes).alias("gh")).select(
-        key, "gh.h1", "gh.h2"
-    )
 
 
 _L1_ORACLE = """
@@ -216,65 +146,16 @@ def l3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collision prob ≈ 1−(1−J⁴)⁴ — >0.98 for J≥0.8); candidates are then
     verified with the exact Jaccard, so output precision is exact and
     only recall is probabilistic. The expensive all-pairs shingle join
-    of L2 is replaced by an equi-join on (band_id, band_hash).
+    of L2 is replaced by an equi-join on (band_id, band_hash). Body:
+    ``api.minhash_near_dups``.
     """
-    num_hashes, band_rows = 16, 4
     d = load_table(spark, sf_dir, "documents")
-    sh = shingles(d, 5)
-
-    # Signature: min over shingles of xxhash64(salt_i, shingle), i = 0..15.
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    # Bands: hash of each run of 4 consecutive signature slots.
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band_id"),
-                        F.xxhash64(
-                            *[F.col(f"h{bi * band_rows + r}") for r in range(band_rows)]
-                        ).alias("band_hash"),
-                    )
-                    for bi in range(num_hashes // band_rows)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_hash")
-
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band_id", "band_hash"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-    # Exact-Jaccard verification restricted to candidate pairs.
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.join(F.broadcast(ca), "doc_a")
-        .join(F.broadcast(cb), "doc_b")
-        .filter(jac >= 0.5)
-        .select("doc_a", "doc_b", R4(jac).alias("jaccard"))
+    return api.minhash_near_dups(
+        d, "doc_id", "text", shingle_n=5, num_hashes=16, band_rows=4, threshold=0.5
+    ).select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        R4(F.col("jaccard")).alias("jaccard"),
     )
 
 
@@ -325,74 +206,15 @@ def l3b_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully JVM-side: shingle explode → × bit positions → conditional sum
     per (doc, bit) → signature reassembly via shifted adds → band
     equi-join (the LSH shape again — no all-pairs scan) → xor +
-    bit_count for exact Hamming verification.
+    bit_count for exact Hamming verification. Body:
+    ``api.simhash_near_dups``; its shingles are ``gram_array``'s, so a
+    document shorter than 5 tokens has none and is in no pair (as in
+    L2 and L3).
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n_sh = F.greatest(F.size(toks) - 4, F.lit(1))
-    tok = (
-        d.select("doc_id", F.explode(F.sequence(F.lit(0), n_sh - 1)).alias("i"), toks.alias("t"))
-        .select(
-            "doc_id",
-            F.concat_ws(" ", F.slice("t", F.col("i") + 1, 5)).alias("token"),
-        )
-        .distinct()
-        .withColumn("h", F.xxhash64("token"))
-    )
-    bits = tok.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"),
-        F.col("h"),
-    ).withColumn(
-        "contrib",
-        F.when(F.expr("shiftright(h, CAST(bit AS INT))").bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-    )
-    sig = (
-        bits.groupBy("doc_id", "bit")
-        .agg(F.sum("contrib").alias("s"))
-        .withColumn(
-            "bitval",
-            F.when(
-                F.col("s") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))")
-            ).otherwise(F.lit(0).cast("long")),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("bitval").alias("simhash"))
-    )
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.shiftright(F.col("simhash"), i * 8)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("band_val"),
-                    )
-                    for i in range(8)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.band_id", "b.band_val")
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band_id", "band_val"])
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sa"),
-            F.col("y.simhash").alias("sb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    return (
-        cand.filter(hamming <= 8)
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-    )
+    return api.simhash_near_dups(
+        d, "doc_id", "text", shingle_n=5, max_hamming=8
+    ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming")
 
 
 @query(
@@ -613,71 +435,15 @@ def l21b_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the verify join's probe side shrinks to true-dups + ~0.1% false
     positives. The driver-side fold of ≤ m/64 partial words is bounded
     by the filter size, not the data (same contract as the ANN query
-    collect).
+    collect). Body: ``api.bloom_known_filter``.
     """
-    M_BITS = 16384
-    N_WORDS = M_BITS // 64
-    K = 4
-
     docs = load_table(spark, sf_dir, "documents")
-    ref = (
-        docs.filter(F.col("doc_id") % 3 == 0)
-        .select(F.md5("text").alias("fp"))
-        .distinct()
-    )
-
-    def hash_pos(col, i):
-        return F.pmod(F.xxhash64(col, F.lit(i)), F.lit(M_BITS))
-
-    # distributed build: fp -> k bit positions -> per-word bit_or
-    bits = ref.select(
-        F.explode(F.array(*[hash_pos(F.col("fp"), i) for i in range(K)])).alias(
-            "pos"
-        )
-    ).select(
-        (F.col("pos") / 64).cast("int").alias("word"),
-        # F.shiftleft only takes a Python-int shift; call the SQL
-        # function directly for a column-valued shift amount
-        F.call_function(
-            "shiftleft", F.lit(1).cast("long"), (F.col("pos") % 64).cast("int")
-        ).alias("bit"),
-    )
-    words = {
-        r.word: r.mask
-        for r in bits.groupBy("word").agg(F.bit_or("bit").alias("mask")).collect()
-    }
-    bloom = F.array(*[F.lit(int(words.get(w, 0))) for w in range(N_WORDS)])
-
+    ref = docs.filter(F.col("doc_id") % 3 == 0).select(F.md5("text").alias("fp"))
     incoming = docs.filter(F.col("doc_id") % 3 != 0).select(
         "doc_id", F.md5("text").alias("fp"), "n_chars"
     )
-    probe = incoming.withColumn("__bloom", bloom)
-    hit = None
-    for i in range(K):
-        pos = hash_pos(F.col("fp"), i)
-        word = F.element_at("__bloom", (pos / 64).cast("int") + 1)
-        test = (
-            word.bitwiseAND(
-                F.call_function(
-                    "shiftleft", F.lit(1).cast("long"), (pos % 64).cast("int")
-                )
-            )
-            != 0
-        )
-        hit = test if hit is None else (hit & test)
-    probe = probe.withColumn("__hit", hit).drop("__bloom")
-
-    candidates = probe.filter(F.col("__hit"))
-    negatives = probe.filter(~F.col("__hit"))
-    verified = candidates.join(
-        F.broadcast(ref.withColumn("__known", F.lit(1))), "fp", "left"
-    ).select(
-        "doc_id",
-        "n_chars",
-        F.coalesce(F.col("__known"), F.lit(0)).alias("is_known"),
-    )
-    return verified.unionByName(
-        negatives.select("doc_id", "n_chars", F.lit(0).alias("is_known"))
+    return api.bloom_known_filter(incoming, ref, "fp", m_bits=16384, k=4).select(
+        "doc_id", "n_chars", "is_known"
     )
 
 
@@ -690,73 +456,13 @@ WHERE levenshtein(a.p_name, b.p_name) <= 2
 """
 
 
-def symspell_fuzzy_join(
-    vocab: DataFrame, name_col: str, max_dist: int = 2
-) -> DataFrame:
-    """**Deletion-neighborhood (SymSpell) join**: all pairs of ``vocab``
-    strings with ``levenshtein ≤ max_dist`` (max_dist ∈ {1, 2}).
-
-    If lev(a,b) ≤ 2 then deleting ≤ 2 characters from each side
-    reaches a common string (a substitution deletes one char from both
-    sides, an insert/delete from one), so generating every
-    ≤2-deletion variant (1 + n + n(n-1)/2 per string, pure codegen'd
-    substring surgery — no UDF) and equi-joining on the variant string
-    yields a candidate superset; exact ``levenshtein`` verification
-    keeps precision at 1.0. The variant string is a well-distributed
-    equi-join key: at 100 TB this is one shuffle on variants, never an
-    all-pairs comparison — the index SymSpell builds in RAM, expressed
-    as a join. Returns (name_a, name_b, edit_dist) with name_a < name_b.
-    """
-    if max_dist not in (1, 2):
-        raise ValueError("symspell_fuzzy_join supports max_dist 1 or 2")
-    names = vocab.select(F.col(name_col).alias("name")).distinct()
-    n = F.length("name")
-    d0 = names.select("name", F.col("name").alias("variant"))
-    d1 = names.select(
-        "name",
-        F.explode(F.expr(
-            "transform(sequence(1, length(name)), i ->"
-            " concat(substring(name, 1, i - 1),"
-            "        substring(name, i + 1, length(name))))"
-        )).alias("variant"),
-    )
-    variants = d0.unionByName(d1)
-    if max_dist == 2:
-        d2 = names.select(
-            "name",
-            F.explode(F.expr(
-                "flatten(transform(sequence(1, length(name) - 1), i ->"
-                " transform(sequence(i + 1, length(name)), j ->"
-                "  concat(substring(name, 1, i - 1),"
-                "         substring(name, i + 1, j - i - 1),"
-                "         substring(name, j + 1, length(name))))))"
-            )).alias("variant"),
-        ).filter(n >= 2)
-        variants = variants.unionByName(d2)
-    variants = variants.distinct()
-
-    a = variants.select(F.col("name").alias("name_a"), "variant")
-    b = variants.select(F.col("name").alias("name_b"), "variant")
-    cand = (
-        a.join(b, "variant")
-        .filter(F.col("name_a") < F.col("name_b"))
-        .select("name_a", "name_b")
-        .distinct()
-    )
-    dist = F.levenshtein("name_a", "name_b")
-    return (
-        cand.withColumn("edit_dist", dist.cast("long"))
-        .filter(F.col("edit_dist") <= max_dist)
-    )
-
-
 @query("l22_fuzzy_name_join", oracle=_L22_ORACLE)
 def l22_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L22: edit-distance similarity join (lev ≤ 2) over the distinct
     name vocabulary — the fuzzy-dedup shape (typo'd titles, OCR'd
     entity names) that exact fingerprints (L1) and token-set Jaccard
-    (L2/L3) both miss. Kernel: ``symspell_fuzzy_join`` above (shared
-    with the api facade).
+    (L2/L3) both miss. Kernel: ``api.dedup.symspell_fuzzy_join``
+    (the body of ``api.fuzzy_join``).
 
     The vocabulary here is `DISTINCT p_name` (names repeat across
     parts), so candidate volume scales with vocabulary, not rows.
@@ -918,68 +624,17 @@ def l11_ngram_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     maximal contiguous duplicated spans those positions form (the
     removable passages), and the duplicated-gram ratio.
 
-    Scale design (the suffix-array of the paper doesn't distribute;
-    this is the shuffle-native equivalent):
-    - gram fingerprints are map-side md5 over a sliding slice — 16-byte
-      uniform keys, no skew by construction, input never copied;
-    - cross-doc detection is distinct(gh, doc) -> count per gh: both
-      stages partial-agg on the same key, so one logical shuffle chain
-      on gh;
-    - the hit join is gh-to-gh equi (co-partitioned with the agg
-      above, AQE merges the exchanges); only duplicated positions --
-      a small fraction of the corpus -- flow into the final doc_id
-      shuffle where row_number's position-minus-rank trick labels
-      maximal runs without any pairwise comparison.
-    No all-pairs stage anywhere; cost is linear in corpus tokens.
-
-    r12 (optimization round, guide §2.4 — remove shuffles outright):
-    cross-doc detection is now a SINGLE gram lineage — a gram is
-    duplicated iff min(doc_id) ≠ max(doc_id) over its occurrences, so
-    one gh-keyed window replaces the old distinct → count ≥ 2 →
-    join-back chain, whose two gram derivations could never share an
-    exchange (column pruning specializes each subtree). Per-doc totals
-    stop re-deriving the gram table entirely: total 8-gram positions
-    IS size(tokens)−7, a map-side expression on the token spine.
-    Plan: 6 Exchange / 3 scans / 3 explodes -> 2 Exchange / 2 scans /
-    1 explode; fresh 2.6 -> 1.0 s at sf0.1 (oracle hash unchanged).
+    Body: ``api.span_dedup_census`` at n = 8 (its docstring holds the
+    scale design and the measured plan); only docs of ≥ 8 tokens get a
+    row, as in the oracle.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
-        F.size("tokens") >= 8
-    )
-    grams = toks.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.size("tokens") - 8)).alias("p"),
-        "tokens",
-    ).select(
-        "doc_id",
-        "p",
-        F.md5(F.array_join(F.slice("tokens", F.col("p") + 1, 8), " ")).alias("gh"),
-    )
-    wgh = Window.partitionBy("gh")
-    hits = (
-        grams.withColumn("mn", F.min("doc_id").over(wgh))
-        .withColumn("mx", F.max("doc_id").over(wgh))
-        .filter(F.col("mn") != F.col("mx"))
-        .select("doc_id", "p")
-    )
-    w = Window.partitionBy("doc_id").orderBy("p")
-    islands = hits.withColumn("island", F.col("p") - F.row_number().over(w))
-    per_doc = islands.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_dup_grams"),
-        F.countDistinct("island").alias("n_dup_spans"),
-    )
-    tot = toks.select(
-        "doc_id", (F.size("tokens") - 7).cast("long").alias("n_grams")
-    )
-    return tot.join(per_doc, "doc_id", "left").select(
+    return api.span_dedup_census(d, "doc_id", "text", n=8).select(
         "doc_id",
         "n_grams",
-        F.coalesce("n_dup_grams", F.lit(0)).alias("n_dup_grams"),
-        F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
-        R4(
-            F.coalesce("n_dup_grams", F.lit(0)).cast("double") / F.col("n_grams")
-        ).alias("dup_gram_ratio"),
+        "n_dup_grams",
+        "n_dup_spans",
+        R4(F.col("dup_gram_ratio")).alias("dup_gram_ratio"),
     )
 
 
@@ -1024,20 +679,12 @@ def l26_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     component id.
     """
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(F.split("text", " "))), " ")
-    )
-    key = F.col("n_chars") * F.lit(10000000) - F.col("doc_id")
-    return (
-        d.select(fp.alias("set_fp"), "doc_id", "n_chars", key.alias("k"))
-        .groupBy("set_fp")
-        .agg(
-            F.count(F.lit(1)).alias("cluster_size"),
-            F.expr("max_by(doc_id, k)").alias("canonical_doc_id"),
-            F.max("n_chars").alias("canonical_n_chars"),
-            (F.count(F.lit(1)) - 1).alias("removed_count"),
-        )
-        .filter(F.col("cluster_size") >= 2)
+    return api.canonicalize_duplicates(d, "doc_id", "text", "n_chars").select(
+        "set_fp",
+        "cluster_size",
+        F.col("canonical_id").alias("canonical_doc_id"),
+        F.col("canonical_quality").alias("canonical_n_chars"),
+        "removed_count",
     )
 
 
@@ -1074,45 +721,9 @@ SELECT doc_a, doc_b, cos_sim FROM (
 """
 
 
-@query("l31_sparse_cosine_selfjoin", oracle=_L31_ORACLE)
-def l31_sparse_cosine_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L31: sparse-vector cosine near-dup via an INVERTED INDEX — the
-    tf-idf/BM25-style counterpart to L5's dense-embedding self-join:
-    documents as sparse bigram tf-idf vectors, candidate pairs found
-    by equi-joining postings on the shared term, cosine assembled from
-    Σ(w_a·w_b) per pair. The discriminative pruning IS the scale
-    lever: terms present in > 5 % of the corpus (integer guard
-    ``df·20 ≤ N``) carry no near-dup signal and are dropped BEFORE the
-    join, which simultaneously (a) bounds every posting list — and
-    hence the join's per-key fan-out — at N/20 by construction, and
-    (b) keeps hot Zipf-head terms out of the shuffle entirely. This is
-    the classic IR trick (stop-listing / impact pruning) expressed
-    relationally; unlike L3's MinHash or L5b's banding it is EXACT
-    over the pruned vector space, with no recall loss to verify.
-
-    Plan: bigrams built map-side from the token array (L27's slide —
-    no positional self-join). Document frequency comes from a per-doc
-    ``array_distinct`` explode + groupBy(term) — map-side combine
-    collapses the corpus to vocab-sized partials, so df costs a
-    ~|vocab|-row shuffle, never a (doc, term) exchange (the naive
-    tf→df route re-ran the whole explode chain inside the broadcast
-    build — measured). The surviving ≤ 5 %-df dictionary broadcasts
-    back to SEMI-FILTER the tf explode in its own stage, so the
-    (doc_id, term) aggregation sees only posting-list rows (bounded by
-    |kept|·N/20), not the corpus. Weights are ℓ²-NORMALIZED IN-PLAN
-    via a doc-partitioned window — not a separate norm agg joined back
-    per pair side, which measured as four recomputations of the weight
-    chain — so cosine is simply Σ(û_a·û_b): the pair stage needs no
-    further joins and its partial sums combine before the
-    (doc_a, doc_b) exchange (which Catalyst elides entirely when the
-    probe side is already doc-clustered). At cluster scale the
-    normalized postings are materialized once, bucketed by term (S7),
-    making the candidate join shuffle-free — the standard
-    build-the-index-then-probe split. The cosine gate compares the
-    4-dp ROUNDED score on both engines, so an ulp straddle at the 0.3
-    boundary cannot flip membership (TRAPS #5's fix applied to a
-    threshold, not a bucket).
-    """
+def _l31_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L31's df-pruned, ℓ²-normalized bigram postings (doc_id, g, un),
+    shared by l31 and the bucketed index of l31b."""
     docs = load_table(spark, sf_dir, "documents")
     # One parquet file = 1-2 scan tasks; the explodes below are the CPU
     # hot spot, so widen BEFORE them (the a21/bench-rules discipline —
@@ -1161,9 +772,51 @@ def l31_sparse_cosine_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("w"),
     )
     wn = Window.partitionBy("doc_id")
-    u = w.withColumn(
+    return w.withColumn(
         "un", F.col("w") / F.sqrt(F.sum(F.col("w") * F.col("w")).over(wn))
     ).select("doc_id", "g", "un")
+
+
+@query("l31_sparse_cosine_selfjoin", oracle=_L31_ORACLE)
+def l31_sparse_cosine_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L31: sparse-vector cosine near-dup via an INVERTED INDEX — the
+    tf-idf/BM25-style counterpart to L5's dense-embedding self-join:
+    documents as sparse bigram tf-idf vectors, candidate pairs found
+    by equi-joining postings on the shared term, cosine assembled from
+    Σ(w_a·w_b) per pair. The discriminative pruning IS the scale
+    lever: terms present in > 5 % of the corpus (integer guard
+    ``df·20 ≤ N``) carry no near-dup signal and are dropped BEFORE the
+    join, which simultaneously (a) bounds every posting list — and
+    hence the join's per-key fan-out — at N/20 by construction, and
+    (b) keeps hot Zipf-head terms out of the shuffle entirely. This is
+    the classic IR trick (stop-listing / impact pruning) expressed
+    relationally; unlike L3's MinHash or L5b's banding it is EXACT
+    over the pruned vector space, with no recall loss to verify.
+
+    Plan: bigrams built map-side from the token array (L27's slide —
+    no positional self-join). Document frequency comes from a per-doc
+    ``array_distinct`` explode + groupBy(term) — map-side combine
+    collapses the corpus to vocab-sized partials, so df costs a
+    ~|vocab|-row shuffle, never a (doc, term) exchange (the naive
+    tf→df route re-ran the whole explode chain inside the broadcast
+    build — measured). The surviving ≤ 5 %-df dictionary broadcasts
+    back to SEMI-FILTER the tf explode in its own stage, so the
+    (doc_id, term) aggregation sees only posting-list rows (bounded by
+    |kept|·N/20), not the corpus. Weights are ℓ²-NORMALIZED IN-PLAN
+    via a doc-partitioned window — not a separate norm agg joined back
+    per pair side, which measured as four recomputations of the weight
+    chain — so cosine is simply Σ(û_a·û_b): the pair stage needs no
+    further joins and its partial sums combine before the
+    (doc_a, doc_b) exchange (which Catalyst elides entirely when the
+    probe side is already doc-clustered). At cluster scale the
+    normalized postings are materialized once, bucketed by term (S7),
+    making the candidate join shuffle-free — the standard
+    build-the-index-then-probe split. The cosine gate compares the
+    4-dp ROUNDED score on both engines, so an ulp straddle at the 0.3
+    boundary cannot flip membership (TRAPS #5's fix applied to a
+    threshold, not a bucket).
+    """
+    u = _l31_postings(spark, sf_dir)
     a = u.select(F.col("doc_id").alias("doc_a"), "g", F.col("un").alias("ua"))
     b = u.select(F.col("doc_id").alias("doc_b"), "g", F.col("un").alias("ub"))
     return (
@@ -1189,48 +842,7 @@ def _l31_postings_bucketed(spark: SparkSession, sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"lc_bucketed.l31_postings_{tag}"
 
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        par = spark.sparkContext.defaultParallelism
-        toks = (
-            docs.repartition(par)
-            .select("doc_id", F.split("text", " ").alias("t"))
-            .filter(F.size("t") >= 2)
-        )
-        barr = F.transform(
-            F.slice("t", 1, F.size("t") - 1),
-            lambda tok, i: F.concat_ws(" ", tok, F.element_at("t", i + 2)),
-        )
-        dfreq = (
-            toks.select(F.explode(F.array_distinct(barr)).alias("g"))
-            .groupBy("g")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-        nd = docs.agg(F.count(F.lit(1)).alias("nd"))
-        kept = (
-            dfreq.crossJoin(F.broadcast(nd))
-            .filter(F.col("df") * 20 <= F.col("nd"))
-            .select("g", "df", "nd")
-        )
-        bigrams = toks.select("doc_id", F.explode(barr).alias("g"))
-        tf = (
-            bigrams.join(F.broadcast(kept.select("g")), "g")
-            .groupBy("doc_id", "g")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        w = tf.join(F.broadcast(kept), "g").select(
-            "doc_id",
-            "g",
-            (
-                F.col("tf") * F.log(F.col("nd").cast("double") / F.col("df"))
-            ).alias("w"),
-        )
-        wn = Window.partitionBy("doc_id")
-        return w.withColumn(
-            "un", F.col("w") / F.sqrt(F.sum(F.col("w") * F.col("w")).over(wn))
-        ).select("doc_id", "g", "un")
-
-    ensure_bucketed(spark, tbl, build, "g")
+    ensure_bucketed(spark, tbl, lambda: _l31_postings(spark, sf_dir), "g")
     return tbl
 
 
@@ -1318,51 +930,15 @@ def l33_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership cannot drift between engines; only the reported ratio is
     rounded.
 
-    Scale: ONE gram lineage, keyed once. Grams ride as a 128-bit hash
-    pair (gram_keys, the l11 md5-gram exactness class), ONE
-    shingle-keyed exchange aggregates each gram's doc set, and every
-    ORDERED doc pair — self-pairs included — explodes map-side from
-    that set: the (a, a) diagonal count IS |sh(A)|, so per-doc sizes
-    need no window over the gram table and no join-back (TRAPS #19
-    still holds — the "size table" never exists). n_a attaches via a
-    doc_a-partitioned window over the PAIR table (doc-pair-sized,
-    never gram-sized). Fan-out per gram is k² with k = docs sharing
-    the gram (4-gram df is naturally tiny — the l15 calibration;
-    max k = 6 at sf0.1, ~365 k lanes total). The old shape derived
-    the gram lineage twice and sorted both sides of a shingle
-    self-join; measured fresh 1.84 -> 1.2 s at sf0.1.
+    Body: ``api.containment_join`` at n = 4, τ = 0.5 (one gram
+    lineage, no join; its docstring holds the plan and measurements).
     """
     d = load_table(spark, sf_dir, "documents")
-    gs = gram_keys(d, "doc_id", 4)
-    pair_expr = F.expr(
-        "flatten(transform(ds, x ->"
-        " transform(ds, y -> struct(x AS doc_a, y AS doc_b))))"
-    )
-    p = (
-        gs.groupBy("h1", "h2")
-        .agg(F.collect_set("doc_id").alias("ds"))
-        .select(F.explode(pair_expr).alias("pr"))
-        .select("pr.doc_a", "pr.doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    n_a = F.max(
-        F.when(F.col("doc_a") == F.col("doc_b"), F.col("n_shared"))
-    ).over(Window.partitionBy("doc_a"))
-    return (
-        p.withColumn("n_a", n_a)
-        .filter(
-            (F.col("doc_a") != F.col("doc_b"))
-            & (F.col("n_shared") * 2 >= F.col("n_a"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_shared",
-            R4(F.col("n_shared").cast("double") / F.col("n_a")).alias(
-                "containment"
-            ),
-        )
+    return api.containment_join(d, "doc_id", "text", n=4, tau=0.5).select(
+        F.col("id_a").alias("doc_a"),
+        F.col("id_b").alias("doc_b"),
+        "n_shared",
+        R4(F.col("containment")).alias("containment"),
     )
 
 
@@ -1425,89 +1001,13 @@ def l34_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting. Runs on the same gram fingerprints as L11 so the two
     ops agree on what counts as duplicated.
 
-    Scale design (no suffix array — the shuffle-native equivalent):
-    - gram fingerprints are map-side md5 over a sliding slice (16-byte
-      uniform keys, no skew);
-    - cross-doc detection is distinct(gh, doc) -> count per gh, one
-      logical shuffle chain on gh; the hit join is gh-equi;
-    - covered token positions explode only from DUPLICATED gram starts
-      (<= 8x the duplicated fraction, not the corpus), deduplicated
-      map-side before the position anti-join;
-    - the rebuild (r12 optimization, guide §2.4/§4.1) never explodes
-      the corpus into token rows: covered positions aggregate to ONE
-      sorted int array per affected doc, and the surviving text is
-      rebuilt map-side with array_except over the position range +
-      element_at — the old plan posexploded every corpus token,
-      anti-joined it against covered positions, and re-sorted the
-      survivors through collect_list(struct) (three corpus-sized
-      stages for what is one per-doc array expression);
-    - cross-doc detection is the l11 single-lineage device (r12): a
-      gram is duplicated iff min(doc_id) ≠ max(doc_id) over its
-      occurrences — one gh-keyed window instead of the old distinct →
-      count ≥ 2 → join-back chain (whose two gram derivations could
-      never share an exchange after column pruning);
-    - totals come from the token lineage itself, never a join back to
-      a re-scan of text-bearing rows (the left join attaches the
-      cleaned text to the doc spine, which prunes to doc_id+text).
-    Cost is linear in corpus tokens; no all-pairs stage anywhere.
-    Plan: 7 Exchange / 4 scans / 4 explodes -> 2 Exchange / 2 scans /
-    1 explode; fresh 2.9 -> 1.0 s at sf0.1 (oracle hash unchanged).
+    Body: ``api.strip_duplicated_spans`` at n = 8, whose duplicated
+    grams come from the same helper as L11's census (its docstring holds
+    the scale design and the measured plan). Cost is linear in corpus
+    tokens; no all-pairs stage anywhere.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
-    grams = (
-        toks.filter(F.size("tokens") >= 8)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.size("tokens") - 8)).alias("p"),
-            "tokens",
-        )
-        .select(
-            "doc_id",
-            "p",
-            F.md5(F.array_join(F.slice("tokens", F.col("p") + 1, 8), " ")).alias(
-                "gh"
-            ),
-        )
-    )
-    wgh = Window.partitionBy("gh")
-    hits = (
-        grams.withColumn("mn", F.min("doc_id").over(wgh))
-        .withColumn("mx", F.max("doc_id").over(wgh))
-        .filter(F.col("mn") != F.col("mx"))
-        .select("doc_id", "p")
-    )
-    # One sorted covered-position array per affected doc; tp ranges of
-    # overlapping duplicated grams merge via array_distinct+sort.
-    cov = (
-        hits
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.array_distinct(
-                    F.flatten(
-                        F.collect_list(
-                            F.sequence(F.col("p") + 1, F.col("p") + 8)
-                        )
-                    )
-                )
-            ).alias("cov")
-        )
-    )
-    # Map-side rebuild: kept positions = [1..n] minus covered (order
-    # preserved by array_except), text = tokens at kept positions.
-    kept = F.array_except(
-        F.sequence(F.lit(1), F.size("tokens")), F.coalesce("cov", F.array())
-    )
-    return toks.join(cov, "doc_id", "left").select(
-        "doc_id",
-        F.size("tokens").alias("n_tokens"),
-        F.size(kept).cast("long").alias("n_kept"),
-        (F.size("tokens") - F.size(kept)).cast("long").alias("n_removed"),
-        F.array_join(
-            F.transform(kept, lambda i: F.element_at("tokens", i)), " "
-        ).alias("clean_text"),
-    )
+    return api.strip_duplicated_spans(d, "doc_id", "text", n=8)
 
 
 # L42 — CDC-driven incremental dedup-index maintenance. Demo history:
@@ -1542,7 +1042,8 @@ def l42_cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint index (fp, doc_id — L1's state at document grain) is
     NOT recomputed when the table changes; the S20e feed hands the
     maintainer exactly the inserted and deleted rows, the index drops
-    the delete keys (left-anti) and unions the inserts, and the query
+    the delete keys (left-anti) and unions the inserts
+    (``api.maintain_dedup_index``), and the query
     asserts the maintained index is row-identical to a full recompute
     of the new snapshot before hashing its duplicate census against
     the source of record. The overwrite plants re-keyed duplicate
@@ -1584,13 +1085,7 @@ def l42_cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("text").alias("fp"), "doc_id"
     )
     ch = t.read_changes(spark, since_version=1, to_version=2)
-    dels = ch.filter(F.col("change_type") == "delete").select(
-        F.md5("text").alias("fp"), "doc_id"
-    )
-    ins = ch.filter(F.col("change_type") == "insert").select(
-        F.md5("text").alias("fp"), "doc_id"
-    )
-    idx2 = idx1.join(dels, ["fp", "doc_id"], "left_anti").unionByName(ins)
+    idx2 = api.maintain_dedup_index(idx1, ch, "doc_id", "text")
     # demo-grade guarantee: maintained index ≡ full recompute of v2
     full = t.read_snapshot(spark, version=2).select(
         F.md5("text").alias("fp"), "doc_id"
@@ -1684,8 +1179,9 @@ def l48_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (singletons = their own cluster) hashes as one unit via the
     deterministic Knuth multiplicative hash (h = id·2654435761 mod
     2³², the S18 device — no engine-specific hash anywhere), 8/1/1
-    into train/val/test. No cluster can straddle splits BY
-    CONSTRUCTION; the census reports, per split, the doc/cluster/char
+    into train/val/test (``api.cluster_safe_split``, called on the
+    cluster and, for the naive split, on doc_id). No cluster can
+    straddle splits BY CONSTRUCTION; the census reports, per split, the doc/cluster/char
     counts plus n_docs_moved — how many docs a naive doc_id-hash
     split would have placed in a DIFFERENT split than their cluster
     (the measured magnitude of the leakage the operator prevents).
@@ -1710,27 +1206,20 @@ def l48_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars",
         F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster"),
     )
-    kh = lambda c: ((c * F.lit(2654435761).cast("long")) % F.lit(4294967296)) % 10  # noqa: E731
-    b = alld.select(
-        "doc_id",
-        "n_chars",
-        "cluster",
-        kh(F.col("cluster")).alias("cb"),
-        kh(F.col("doc_id")).alias("nb"),
+    naive = api.cluster_safe_split(alld, "doc_id", "doc_id").withColumnRenamed(
+        "split", "naive_split"
     )
-    cls3 = lambda c: F.when(c < 8, 0).when(c == 8, 1).otherwise(2)  # noqa: E731
-    split = (
-        F.when(F.col("cb") < 8, "train")
-        .when(F.col("cb") == 8, "val")
-        .otherwise("test")
-    )
-    return b.groupBy(split.alias("split")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("cluster").alias("n_clusters"),
-        F.sum("n_chars").alias("n_chars"),
-        F.count(
-            F.when(cls3(F.col("cb")) != cls3(F.col("nb")), 1)
-        ).alias("n_docs_moved"),
+    return (
+        api.cluster_safe_split(naive, "doc_id", "cluster")
+        .groupBy("split")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.countDistinct("cluster").alias("n_clusters"),
+            F.sum("n_chars").alias("n_chars"),
+            F.count(F.when(F.col("split") != F.col("naive_split"), 1)).alias(
+                "n_docs_moved"
+            ),
+        )
     )
 
 
@@ -1788,6 +1277,26 @@ FROM fo GROUP BY 1
 """
 
 
+def _modal_agreement(text_pairs: DataFrame, emb_pairs: DataFrame) -> DataFrame:
+    """The l50/l50b census: ``api.dedup_agreement`` over (doc_a, doc_b,
+    jaccard) text pairs and (doc_a, doc_b, cos_sim) embedding pairs,
+    its a_only/b_only classes named text_only/embedding_only and the
+    per-class means R4'd."""
+    label = (
+        F.when(F.col("agreement") == "a_only", "text_only")
+        .when(F.col("agreement") == "b_only", "embedding_only")
+        .otherwise(F.col("agreement"))
+    )
+    return api.dedup_agreement(
+        text_pairs, emb_pairs, ("doc_a", "doc_b"), "jaccard", "cos_sim"
+    ).select(
+        label.alias("agreement"),
+        "n_pairs",
+        R4(F.col("mean_score_a")).alias("mean_jaccard"),
+        R4(F.col("mean_score_b")).alias("mean_cosine"),
+    )
+
+
 @query("l50_cross_modal_dedup_agreement", oracle=_L50_ORACLE)
 def l50_cross_modal_dedup_agreement(
     spark: SparkSession, sf_dir: str
@@ -1814,41 +1323,22 @@ def l50_cross_modal_dedup_agreement(
 
     Scale: each leg keeps its own 100 TB story (L2 → L3's banding,
     L5 → hyperplane-sign pruning); the agreement join is pair-keyed
-    — output-sized, uniform — and the census is one 3-row agg.
+    — output-sized, uniform — and the census is one 3-row agg
+    (``api.dedup_agreement``, through ``_modal_agreement``).
     """
     from lightcurator_spark.operators.similarity import exact_cosine_pairs
 
-    tp = l2_shingle_jaccard(spark, sf_dir).select(
-        F.col("doc_a").alias("ta"),
-        F.col("doc_b").alias("tb"),
-        "jaccard",
-    )
-    # r12 optimization: the exact embedding leg runs through the shared
-    # GEMM-candidates + exact-JVM-verify kernel (same pair set, same
-    # raw floats as the old BNLJ pair scan — see exact_cosine_pairs).
+    tp = l2_shingle_jaccard(spark, sf_dir)
+    # the exact embedding leg runs through the shared GEMM-candidates +
+    # exact-JVM-verify kernel (same pair set, same raw floats as a
+    # pair scan — see exact_cosine_pairs)
     ep = exact_cosine_pairs(spark, sf_dir, tau=0.45).select(
-        F.col("vec_a").alias("ea"),
-        F.col("vec_b").alias("eb"),
+        F.col("vec_a").alias("doc_a"),
+        F.col("vec_b").alias("doc_b"),
         F.col("__cos").alias("cos_sim"),
     )
-    fo = tp.join(
-        ep,
-        (tp.ta == ep.ea) & (tp.tb == ep.eb),
-        "full_outer",
-    )
-    cls = (
-        F.when(
-            F.col("jaccard").isNotNull() & F.col("cos_sim").isNotNull(),
-            "both",
-        )
-        .when(F.col("jaccard").isNotNull(), "text_only")
-        .otherwise("embedding_only")
-    )
-    return fo.groupBy(cls.alias("agreement")).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        R4(F.avg("jaccard")).alias("mean_jaccard"),
-        R4(F.avg("cos_sim")).alias("mean_cosine"),
-    )
+    return _modal_agreement(tp, ep)
+
 
 @query(
     "l50b_cross_modal_dedup_lsh",
@@ -1870,8 +1360,9 @@ def l50b_cross_modal_dedup_lsh(
     cosine verification at τ = 0.45 RAW scores (not the R4 export —
     the census means must average the same floats l50's exact leg
     averages), measured recall 1.0 vs L5. The agreement join and
-    census are l50's verbatim: full-outer on the exact integer pair
-    key, both/text_only/embedding_only classes, R4'd per-class means.
+    census are l50's (``_modal_agreement``): full-outer on the exact
+    integer pair key, both/text_only/embedding_only classes, R4'd
+    per-class means.
 
     Exactness: every surviving pair's SCORE is exact (both legs verify
     candidates with the full-precision kernel), so on any corpus where
@@ -1898,31 +1389,9 @@ def l50b_cross_modal_dedup_lsh(
     """
     from lightcurator_spark.operators.similarity import banded_cosine_pairs
 
-    tp = l3_minhash_lsh(spark, sf_dir).select(
-        F.col("doc_a").alias("ta"),
-        F.col("doc_b").alias("tb"),
-        "jaccard",
-    )
     ep = banded_cosine_pairs(spark, sf_dir, tau=0.45).select(
-        F.col("vec_a").alias("ea"),
-        F.col("vec_b").alias("eb"),
+        F.col("vec_a").alias("doc_a"),
+        F.col("vec_b").alias("doc_b"),
         F.col("cos_raw").alias("cos_sim"),
     )
-    fo = tp.join(
-        ep,
-        (tp.ta == ep.ea) & (tp.tb == ep.eb),
-        "full_outer",
-    )
-    cls = (
-        F.when(
-            F.col("jaccard").isNotNull() & F.col("cos_sim").isNotNull(),
-            "both",
-        )
-        .when(F.col("jaccard").isNotNull(), "text_only")
-        .otherwise("embedding_only")
-    )
-    return fo.groupBy(cls.alias("agreement")).agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        R4(F.avg("jaccard")).alias("mean_jaccard"),
-        R4(F.avg("cos_sim")).alias("mean_cosine"),
-    )
+    return _modal_agreement(l3_minhash_lsh(spark, sf_dir), ep)

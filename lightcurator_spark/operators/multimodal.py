@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lightcurator_spark import api
 from lightcurator_spark.plans.registry import query
 from lightcurator_spark.registry import load_table
 
@@ -707,7 +708,8 @@ def l36_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pixels never shuffle — the mapInPandas hashing stage emits 8
     bytes per image no matter the payload size; the band table is
     7 rows × 8 bytes per image. At 100 TB of images the shuffle
-    carries only hashes.
+    carries only hashes. The join is ``api.phash_near_dup_pairs`` at
+    its defaults.
     """
     import numpy as np
 
@@ -724,50 +726,8 @@ def l36_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": ids, "phash": pd.array(hashes, dtype="int64")})
 
     hashed = d.mapInPandas(hash_images, "doc_id long, phash long")
-    return _phash_band_pairs(hashed)
-
-
-def _phash_band_pairs(hashed: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """The L36 candidate machinery over a (doc_id, phash) table: 7
-    bands of 9 bits (pigeonhole-complete for Hamming ≤ 6), band-value
-    equi-join, exact JVM-side Hamming verify — shared by l36 and the
-    binaryFile-fed l36b so the two paths provably run the same join."""
-    bands = hashed.select(
-        "doc_id",
-        "phash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_idx"),
-                    F.shiftright("phash", 9 * i)
-                    .bitwiseAND(F.lit(511))
-                    .alias("band_val"),
-                )
-                for i in range(7)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "phash", "b.band_idx", "b.band_val")
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("phash").alias("h_a"),
-        "band_idx",
-        "band_val",
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("h_b"),
-        "band_idx",
-        "band_val",
-    )
-    cand = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "h_a", "h_b")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return cand.filter(ham <= max_hamming).select(
-        "doc_a", "doc_b", ham.cast("int").alias("hamming")
+    return api.phash_near_dup_pairs(hashed, "doc_id", "phash").select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
     )
 
 
@@ -792,8 +752,9 @@ def l36b_image_phash_binaryfile(
     its partition's files, the distributed-ingest shape), read back
     through the S4 ``binaryFile`` source as (path, content) rows, and
     the pHash kernel decodes the binary COLUMN — never re-synthesizes
-    — before the exact same banded join as l36 (shared helper, so the
-    seam is the only difference; tests pin pair-for-pair equality).
+    — before the exact same banded join as l36
+    (``api.phash_near_dup_pairs``, so the seam is the only difference;
+    tests pin pair-for-pair equality).
 
     Scale: binaryFile splits the listing across executors and never
     materializes more than a batch of payloads per task; the hashing
@@ -855,7 +816,9 @@ def l36b_image_phash_binaryfile(
             )
 
     hashed = bin_df.mapInPandas(hash_content, "doc_id long, phash long")
-    return _phash_band_pairs(hashed)
+    return api.phash_near_dup_pairs(hashed, "doc_id", "phash").select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
+    )
 
 
 def synth_fp_pcm(doc_id: int) -> "np.ndarray":

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lightcurator_spark import api
 from lightcurator_spark.plans.registry import (
     EAGER_BUCKETED,
     EAGER_CHECKPOINT,
@@ -613,67 +614,12 @@ def l25_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix keeps only each doc's RAREST ~n/10 tokens) and two doc-key
     joins to fetch token arrays. No all-pairs stage exists at any
     scale; stop-word-like hot tokens never enter prefixes because
-    they sort last.
+    they sort last. Body: ``api.prefix_jaccard_join`` at τ = 9/10.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
-    )
-    tf = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n_t"))
-    tokf = tok.join(F.broadcast(tf), "token")
-    wd = Window.partitionBy("doc_id").orderBy("n_t", "token")
-    wn = Window.partitionBy("doc_id")
-    ranked = tokf.withColumn("rn", F.row_number().over(wd)).withColumn(
-        "n", F.count(F.lit(1)).over(wn)
-    )
-    # p = n - ceil(9n/10) + 1, all-integer: ceil(9n/10) = (9n+9) div 10
-    p = F.col("n") - F.floor((9 * F.col("n") + 9) / F.lit(10.0)) + 1
-    prefix = ranked.filter(F.col("rn") <= p).select("doc_id", "token")
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.token") == F.col("b.token"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    sets = tok.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set("token")).alias("toks"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("toks").alias("ta"),
-        F.col("n").alias("na"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("toks").alias("tb"),
-        F.col("n").alias("nb"),
-    )
-    inter = F.size(F.array_intersect("ta", "tb")).cast("long")
-    union = F.col("na") + F.col("nb") - F.col("inter_size")
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("inter_size", inter)
-        .filter(10 * F.col("inter_size") >= 9 * union)
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter_size",
-            union.alias("union_size"),
-            R4(
-                F.col("inter_size").cast("double") / union.cast("double")
-            ).alias("jaccard"),
-        )
-    )
+    return api.prefix_jaccard_join(
+        docs, "doc_id", "text", tau_num=9, tau_den=10
+    ).withColumn("jaccard", R4(F.col("jaccard")))
 
 
 # --------------------------------------------------------------------

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from lightcurator_spark import api
-from lightcurator_spark.operators.dedup import gram_keys
+from lightcurator_spark.api.dedup import gram_keys, shingles_raw
 from lightcurator_spark.plans.registry import EAGER_CHECKPOINT, query
 from lightcurator_spark.registry import load_table
 
@@ -695,8 +695,6 @@ def l15_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle explode — the train corpus never shuffles
     (`test_l15_eval_shingles_broadcast`). Per-lang survival counts then
     need one partial-aggregated shuffle of doc-level flags."""
-    from lightcurator_spark.operators.dedup import shingles_raw
-
     d = load_table(spark, sf_dir, "documents")
     # shingles_raw on BOTH sides (r13): the semi-join stream side needs
     # no dedup (membership only) and the build side re-distincts on the
@@ -967,8 +965,6 @@ def l24_full_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly job shape: at 100 TB, stage flags beat stage
     materializations by an order of magnitude in I/O.
     """
-    from lightcurator_spark.operators.dedup import shingles_raw
-
     d = load_table(spark, sf_dir, "documents")
     train = d.filter(F.col("source") != "src0")
     # shingles_raw on both sides — the l15 rationale (r13)

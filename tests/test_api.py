@@ -328,16 +328,8 @@ def test_harmonic_amplitude_matches_d15(spark):
 
 
 def test_span_dedup_census_matches_l11(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    got = {
-        (r.doc_id, r.n_grams, r.n_dup_grams, r.n_dup_spans)
-        for r in api.span_dedup_census(docs, "doc_id", "text", n=8).collect()
-    }
-    want = {
-        (r.doc_id, r.n_grams, r.n_dup_grams, r.n_dup_spans)
-        for r in SPECS["l11_ngram_span_dedup"].fn(spark, SF_DIR).collect()
-    }
-    assert got == want
+    out = api.span_dedup_census(_renamed(spark), "x_doc_id", "x_text", n=8)
+    _assert_matches(spark, out, "l11_ngram_span_dedup")
 
 
 def test_scd2_intervals_matches_m2(spark):
@@ -791,16 +783,8 @@ def test_theil_sen_matches_a21(spark):
 
 
 def test_prefix_jaccard_join_matches_l25(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    got = {
-        (r.doc_a, r.doc_b): (r.inter_size, r.union_size)
-        for r in api.prefix_jaccard_join(docs, "doc_id", "text").collect()
-    }
-    want = {
-        (r.doc_a, r.doc_b): (r.inter_size, r.union_size)
-        for r in SPECS["l25_prefix_filter_join"].fn(spark, SF_DIR).collect()
-    }
-    assert got == want
+    out = api.prefix_jaccard_join(_renamed(spark), "x_doc_id", "x_text", 9, 10)
+    _assert_matches(spark, out, "l25_prefix_filter_join")
 
 
 def test_weighted_median_negative_weight_raises(spark):
@@ -866,16 +850,8 @@ def test_prefix_jaccard_join_high_tau_finds_exact_dups(spark):
 
 
 def test_canonicalize_duplicates_matches_l26(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    got = {
-        r.set_fp: (r.cluster_size, r.canonical_id, r.canonical_quality)
-        for r in api.canonicalize_duplicates(docs, "doc_id", "text", "n_chars").collect()
-    }
-    want = {
-        r.set_fp: (r.cluster_size, r.canonical_doc_id, r.canonical_n_chars)
-        for r in SPECS["l26_canonical_selection"].fn(spark, SF_DIR).collect()
-    }
-    assert got == want
+    out = api.canonicalize_duplicates(_renamed(spark), "x_doc_id", "x_text", "x_n_chars")
+    _assert_matches(spark, out, "l26_canonical_selection")
 
 
 def test_prefix_jaccard_join_complete_across_thresholds(spark, tmp_path):
@@ -1123,16 +1099,8 @@ def test_ks_drift_matches_a25(spark):
 
 
 def test_containment_join_matches_l33(spark):
-    d = load_table(spark, SF_DIR, "documents")
-    got = {
-        (r.id_a, r.id_b): (r.n_shared, _r4(r.containment))
-        for r in api.containment_join(d, "doc_id", "text").collect()
-    }
-    want = {
-        (r.doc_a, r.doc_b): (r.n_shared, r.containment)
-        for r in SPECS["l33_shingle_containment"].fn(spark, SF_DIR).collect()
-    }
-    assert got == want
+    out = api.containment_join(_renamed(spark), "x_doc_id", "x_text", n=4, tau=0.5)
+    _assert_matches(spark, out, "l33_shingle_containment")
 
 
 def test_containment_join_tau_is_integer_exact(spark):
@@ -1190,16 +1158,8 @@ def test_chi2_independence_matches_a27(spark):
 
 
 def test_strip_duplicated_spans_matches_l34(spark):
-    d = load_table(spark, SF_DIR, "documents")
-    got = {
-        r.doc_id: (r.n_tokens, r.n_kept, r.n_removed, r.clean_text)
-        for r in api.strip_duplicated_spans(d, "doc_id", "text").collect()
-    }
-    want = {
-        r.doc_id: (r.n_tokens, r.n_kept, r.n_removed, r.clean_text)
-        for r in SPECS["l34_boilerplate_strip"].fn(spark, SF_DIR).collect()
-    }
-    assert got == want
+    out = api.strip_duplicated_spans(_renamed(spark), "x_doc_id", "x_text", n=8)
+    _assert_matches(spark, out, "l34_boilerplate_strip")
 
 
 def test_column_profile_matches_dq3(spark):
@@ -1241,19 +1201,21 @@ def test_shingle_builders_survive_short_docs(spark):
     """sequence(1, 0) is DESCENDING in Spark — a doc shorter than the
     shingle width must produce ZERO shingles, never a slice(…, 0, n)
     crash (caught live when L34's strip shortened docs below 4/8
-    tokens)."""
+    tokens). Docs 1 and 4 are identical and short: they are no pair,
+    no span row and no removal."""
     d = spark.createDataFrame(
-        [(1, "only two"), (2, "a b c d e f g h i j"), (3, "x")],
+        [(1, "only two"), (2, "a b c d e f g h i j"), (3, "x"), (4, "only two")],
         "doc_id long, text string",
     )
-    pairs = api.minhash_near_dups(d, "doc_id", "text").collect()
-    assert pairs == []
-    cont = api.containment_join(d, "doc_id", "text", n=4).collect()
-    assert cont == []
-    from lightcurator_spark.operators.dedup import shingles
-
-    sh = shingles(d, n=4).collect()
-    assert {r.doc_id for r in sh} == {2}
+    assert api.minhash_near_dups(d, "doc_id", "text").collect() == []
+    assert api.simhash_near_dups(d, "doc_id", "text").collect() == []
+    assert api.containment_join(d, "doc_id", "text", n=4).collect() == []
+    sh = api.shingle_pairs(d, "doc_id", "text", n=4).collect()
+    assert {r["__id"] for r in sh} == {2}
+    census = api.span_dedup_census(d, "doc_id", "text", n=8).collect()
+    assert [(r.doc_id, r.n_grams, r.n_dup_grams) for r in census] == [(2, 3, 0)]
+    strip = api.strip_duplicated_spans(d, "doc_id", "text").collect()
+    assert {r.doc_id: r.n_removed for r in strip} == {1: 0, 2: 0, 3: 0, 4: 0}
 
 
 def test_pca_project_matches_l35b(spark):
